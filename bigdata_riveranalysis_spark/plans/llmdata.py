@@ -719,30 +719,10 @@ def _jaccard_local(spark: SparkSession, sh: DataFrame, df_cap: int) -> DataFrame
     when post-collect stats exceed the dense gates — the caller then
     runs the distributed plan.
 
-    r8 perf note — resolving the r7 bench contradiction (in-source
-    claim 0.942 s vs driver BENCH_r07 2.741 s, VERDICT r7 #2): fresh
-    measurement at sf0.1, local[32], LOW load (loadavg 1.7-1.9,
-    idle-probe 0.05-0.26 s vs ~0.025 idle) still swung 1.03-5.50 s
-    across 4 runs — so the r7 number was NOT pure neighbor noise; the
-    query itself had high variance. Segment profile at the same low
-    load: toPandas 0.38-1.30 s, factorize+build ~0.03 s, tile sweep
-    0.59-3.02 s with the GEMM at only 0.17-0.40 s of it — the
-    variance lived in the sweep's per-tile TEMPORARIES (np.add.outer's
-    100 MB ssum + scaled copies + bool temp: allocate/zero/free
-    traffic under memory pressure), not in BLAS compute or
-    contention. r8 therefore preallocates the two tile buffers and
-    runs the threshold in-place in integer-only f32 (see the loop
-    comment), eliminating every per-tile allocation; survivor counts
-    are recovered exactly from the tile buffer (post-review — the
-    first cut einsum-recomputed them, O(survivors·vocab) at scalar
-    speed). Post-change, same box: first (cold) run
-    3.6 s, then 1.00/1.22/1.06/1.40 s — min 1.00 s and a steady-state
-    band of ~1.0-1.4 s vs the pre-change 1.0-5.5 s (the residual
-    swing is the Arrow collect, 0.38-1.30 s in the segment profile).
-    Honest bound: expect a driver row of ~1.0-1.5 s at comparable
-    load, not the r7 note's 0.94 s. Per-query loadavg now lands in
-    BENCH.json (loadavg_at_min) so the next verdict can read a row's
-    contention context directly.
+    The tile sweep preallocates its two tile buffers and thresholds
+    in place in integer-only f32 (see the loop comment): the per-tile
+    temporaries, not BLAS, were the run-to-run variance, and survivor
+    counts come exactly from the tile buffer.
     """
     import numpy as np
     import pandas as pd

@@ -489,11 +489,9 @@ def sensor_trend_ols(spark: SparkSession, sf_dir: str) -> DataFrame:
     nonnegative S — see EX.ratio_round4_sql.)
 
     Exactness/headroom: all moment sums accumulate in DECIMAL(38,0)
-    against DuckDB's HUGEINT — wide_sum's divergence-class fix —
-    including under the SPARK_GRAFT_LONG_SUMS A/B switch, which this
-    query ignores: even a per-row x² of ~1e15 overflows a LONG sum
-    near 1e4 rows/sensor, so the long-sum instrument would error
-    here (direct decimal casts, not wide_sum, by design). The
+    against DuckDB's HUGEINT — wide_sum's divergence-class fix: even
+    a per-row x² of ~1e15 overflows a LONG sum near 1e4 rows/sensor
+    (direct decimal casts, not wide_sum, by design). The
     re-zeroed x keeps n·Σx² under ~1e36 out to ~1e9 readings/sensor
     per decade of data; beyond that, re-zero x per epoch window.
 

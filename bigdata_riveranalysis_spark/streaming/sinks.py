@@ -11,7 +11,7 @@ from __future__ import annotations
 
 from collections.abc import Callable
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
@@ -115,9 +115,10 @@ def start_upsert_sink(
     the MERGE-shaped sink for update-mode aggregations (latest value
     per key visible to readers, not an append log).
 
-    Each micro-batch: read the current table, anti-join out the keys
-    the batch replaces, union the batch, rewrite. Rewriting the whole
-    table is correct here and fine for a *serving* table (these are
+    Each micro-batch: read the current table, union the batch, keep
+    the batch's row for every key it carries, rewrite. Batch rows with
+    a NULL key are dropped: no reader can look them up. Rewriting the
+    whole table is correct here and fine for a *serving* table (these are
     small by construction — one row per key); a 100 TB-keyspace sink
     instead partitions the table by a key prefix and rewrites only
     the partitions the batch touches (same handler, plus dynamic
@@ -173,12 +174,24 @@ def start_upsert_sink(
         raise ValueError(f"commit must be 'rename' or 'pointer', got {commit!r}")
 
     def _merge(spark, batch: DataFrame, current_dir: str | None) -> DataFrame:
+        # A NULL key never matches a key comparison, so a NULL-key row
+        # would survive every later batch and pile up.
+        keys = list(key_cols)
+        batch = batch.dropna(subset=keys)
         if current_dir is None:  # genuinely the first batch
-            return batch
+            return batch.dropDuplicates(keys)
+        # One pass over the batch: union it with the current table and
+        # keep, per key, a batch row if there is one. An anti-join on
+        # the batch's keys would scan and parse the source twice.
         current = spark.read.parquet(current_dir)
-        return current.join(
-            F.broadcast(batch.select(*key_cols)), list(key_cols), "left_anti"
-        ).unionByName(batch)
+        newest = Window.partitionBy(*keys).orderBy(F.col("__new").desc())
+        return (
+            current.withColumn("__new", F.lit(0))
+            .unionByName(batch.withColumn("__new", F.lit(1)))
+            .withColumn("__rank", F.row_number().over(newest))
+            .filter("__rank = 1")
+            .drop("__new", "__rank")
+        )
 
     def _sweep(keep: set[str]) -> None:
         # Sweep generation/shadow dirs orphaned by a crash after
@@ -203,7 +216,6 @@ def start_upsert_sink(
                 "with commit='pointer' (or remove the pointer and its "
                 "generations deliberately) instead of rename-committing over it"
             )
-        batch = batch.dropDuplicates(list(key_cols))
         tmp = f"{path}__b{batch_id}"
         old = f"{path}__old"
         # Heal a crash window from a previous batch: table missing but
@@ -221,7 +233,6 @@ def start_upsert_sink(
 
     def upsert_pointer(batch: DataFrame, batch_id: int) -> None:
         spark = batch.sparkSession
-        batch = batch.dropDuplicates(list(key_cols))
         live = resolve_serving_path(path)  # None | legacy path | gen dir
         gen = f"{path}__b{batch_id}"
         if live == gen:  # retry after commit: never read+overwrite one dir

@@ -7,18 +7,11 @@
      memoized frame survives spark.catalog.clearCache() (the bench
      clears the SQL cache between queries; RDD-level localCheckpoint
      blocks must not be collateral).
-  2. normalize_bench provenance gates (ADVICE r12): the backfill tool
-     refuses a wrong-source BENCH.json (sha pin), refuses totals /
-     count / headline drift, never touches parsed/tail, and attaches
-     a labeled queries_full on the happy path.
-  3. record_band qualification (VERDICT r12 #5): a contended run
-     (hot dgemm probe) is refused; a quiet one records the band with
-     per-query loadavg context.
-  4. The BPE tie plant (VERDICT r12 #6): planted pair counts dominate
+  2. The BPE tie plant (VERDICT r12 #6): planted pair counts dominate
      the corpus (corpus-adaptive reps) so all four merge rounds are
      tie-break-decided — checked against an independent pandas pair
      count, not against the engine.
-  5. Dedup/BPE staging memo (the r13 second amortization pass): the
+  3. Dedup/BPE staging memo (the r13 second amortization pass): the
      MinHash signature table, LSH pair table, components labeling and
      trained BPE state each feed 2-4 registered consumers and must
      build exactly once per (application, corpus).
@@ -26,16 +19,9 @@
 
 from __future__ import annotations
 
-import json
 import os
-import subprocess
-import sys
-
-import pytest
 
 from .conftest import SF_ORACLE, SF_SMOKE
-
-_REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 # ---------------------------------------------------------------------------
@@ -86,154 +72,7 @@ def test_recall_consumes_memoized_search(spark):
 
 
 # ---------------------------------------------------------------------------
-# 2. normalize_bench provenance gates
-# ---------------------------------------------------------------------------
-
-
-def _write(tmp, name, obj):
-    p = os.path.join(tmp, name)
-    with open(p, "w") as f:
-        json.dump(obj, f, indent=2)
-    return p
-
-
-def _mk_bench(tmp, queries, total):
-    return _write(
-        tmp, "BENCH.json", {"value": total, "queries": queries, "unit": "sec"}
-    )
-
-
-def _mk_artifact(tmp, parsed):
-    return _write(tmp, "BENCH_rX.json", {"tail": "...", "parsed": parsed})
-
-
-def test_normalize_bench_happy_path(tmp_path):
-    from tools.normalize_bench import normalize
-
-    tmp = str(tmp_path)
-    full = {"a": 1.0, "b": 2.0, "c": 3.0}
-    bench = _mk_bench(tmp, full, 6.0)
-    art = _mk_artifact(
-        tmp, {"value": 6.0, "n_queries": 3, "queries": {"a": 1.0}}
-    )
-    normalize(art, bench)
-    out = json.load(open(art))
-    assert out["queries_full"] == full
-    assert out["parsed"]["queries"] == {"a": 1.0}, "parsed must stay a faithful parse"
-    assert out["queries_full_source"]["file"] == "BENCH.json"
-    assert len(out["queries_full_source"]["sha256"]) == 64
-    with open(art, "rb") as f:
-        assert f.read().endswith(b"\n"), "trailing newline preserved"
-
-
-@pytest.mark.parametrize(
-    "parsed_patch, bench_patch, msg",
-    [
-        ({"value": 9.9}, {}, "total mismatch"),
-        ({"n_queries": 7}, {}, "count mismatch"),
-        ({"queries": {"a": 1.5}}, {}, "headline entries disagree"),
-        ({}, {"queries": {"a": 1.0, "b": 2.0, "c": 9.0}, "value": 12.0, "n": 3}, "count mismatch|total mismatch|sums"),
-    ],
-)
-def test_normalize_bench_refusals(tmp_path, parsed_patch, bench_patch, msg):
-    from tools.normalize_bench import normalize
-
-    tmp = str(tmp_path)
-    full = {"a": 1.0, "b": 2.0, "c": 3.0}
-    bench_obj = {"value": 6.0, "queries": full}
-    bench_obj.update({k: v for k, v in bench_patch.items() if k != "n"})
-    bench = _write(tmp, "BENCH.json", bench_obj)
-    parsed = {"value": 6.0, "n_queries": 3, "queries": {"a": 1.0}}
-    parsed.update(parsed_patch)
-    art = _mk_artifact(tmp, parsed)
-    with pytest.raises(SystemExit, match=msg):
-        normalize(art, bench)
-    assert "queries_full" not in json.load(open(art))
-
-
-def test_normalize_bench_sha_pin(tmp_path):
-    from tools.normalize_bench import normalize
-
-    tmp = str(tmp_path)
-    bench = _mk_bench(tmp, {"a": 1.0}, 1.0)
-    art = _mk_artifact(
-        tmp,
-        {
-            "value": 1.0,
-            "n_queries": 1,
-            "queries": {},
-            "bench_json_sha256_16": "0" * 16,  # pins a DIFFERENT file
-        },
-    )
-    with pytest.raises(SystemExit, match="provenance mismatch"):
-        normalize(art, bench)
-
-
-# ---------------------------------------------------------------------------
-# 3. record_band qualification
-# ---------------------------------------------------------------------------
-
-
-def _run_record_band(repo_benchfile, tmp, args=()):
-    """record_band reads/writes next to itself, so run it against a
-    scratch copy of the repo tools dir."""
-    import shutil
-
-    os.makedirs(os.path.join(tmp, "tools"), exist_ok=True)
-    shutil.copy(
-        os.path.join(_REPO, "tools", "record_band.py"),
-        os.path.join(tmp, "tools", "record_band.py"),
-    )
-    shutil.copy(repo_benchfile, os.path.join(tmp, "BENCH.json"))
-    return subprocess.run(
-        [sys.executable, os.path.join(tmp, "tools", "record_band.py"), "test", *args],
-        capture_output=True,
-        text=True,
-    )
-
-
-def test_record_band_refuses_contended_run(tmp_path):
-    tmp = str(tmp_path)
-    bench = _write(
-        str(tmp_path),
-        "src_bench.json",
-        {
-            "value": 3.0,
-            "sf": 0.1,
-            "queries": {"a": 1.0, "b": 2.0},
-            "loadavg_at_min": {"a": 1.0, "b": 1.2},
-            "noise": [{"loadavg_1m": 2.0, "probe_sec": 0.6}],  # hot probe
-            "errors": {},
-        },
-    )
-    r = _run_record_band(bench, tmp)
-    assert r.returncode == 1 and "refusing" in r.stdout
-    assert not os.path.exists(os.path.join(tmp, "QUIET_BAND.json"))
-
-
-def test_record_band_records_quiet_run(tmp_path):
-    tmp = str(tmp_path)
-    bench = _write(
-        str(tmp_path),
-        "src_bench.json",
-        {
-            "value": 3.0,
-            "sf": 0.1,
-            "queries": {"a": 1.0, "b": 2.0},
-            "loadavg_at_min": {"a": 1.0, "b": 1.2},
-            "noise": [{"loadavg_1m": 2.0, "probe_sec": 0.03}],
-            "errors": {},
-        },
-    )
-    r = _run_record_band(bench, tmp)
-    assert r.returncode == 0, r.stdout + r.stderr
-    band = json.load(open(os.path.join(tmp, "QUIET_BAND.json")))
-    assert band["queries"]["b"] == {"min": 2.0, "loadavg_at_min": 1.2}
-    assert band["n_queries"] == 2
-
-
-# ---------------------------------------------------------------------------
-# 4. BPE tie plant dominates (independent pandas count)
+# 2. BPE tie plant dominates (independent pandas count)
 # ---------------------------------------------------------------------------
 
 
@@ -268,7 +107,7 @@ def test_bpe_tie_plant_dominates(tmp_path):
 
 
 # ---------------------------------------------------------------------------
-# 5. dedup-family + BPE staging memo (the r13 second amortization pass:
+# 3. dedup-family + BPE staging memo (the r13 second amortization pass:
 #    the MinHash signature table, the LSH pair table, the components
 #    labeling and the trained BPE state were each rebuilt wholesale by
 #    2-4 registered consumers — same waste class as VERDICT r12 #2's

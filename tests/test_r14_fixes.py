@@ -18,10 +18,8 @@
      don't leak executor blocks until the ContextCleaner notices.
   5. The memo's "derive once" is lock-enforced (ADVICE r13): two
      threads racing the same (corpus, stage) produce ONE build.
-  6. bench retime/requalify (VERDICT r13 #4): rows landing >1.35×
-     their quiet-band value are flagged mechanically and re-timed in
-     isolation; the requalified record carries the context a verdict
-     needs (band, bench min, re-time min, probe, loadavg).
+  6. stream_feature_map_state: the per-user map bundle survives
+     micro-batches and matches an independent pandas fold.
 """
 
 from __future__ import annotations
@@ -31,8 +29,6 @@ import threading
 import time
 
 from .conftest import SF_SMOKE
-
-_REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def _tbl_hash(df):
@@ -410,108 +406,3 @@ def test_feature_map_state_randomized_vs_pandas_reference(spark, tmp_path):
             sum(bundle.values()),
         )
     assert got == want
-
-
-# ---------------------------------------------------------------------------
-# 7. record_band's peak gate is pass-aware
-# ---------------------------------------------------------------------------
-
-
-def test_record_band_peak_gate_skips_pass1_samples(tmp_path):
-    """A hot pass-1 probe (the JVM's C2 compilation storm — self-load)
-    must not refuse the band when steady-state (pass ≥ 2) samples are
-    quiet; a hot STEADY-STATE probe still refuses."""
-    import json as _json
-    import subprocess as _sp
-    import sys as _sys
-    import shutil as _shutil
-
-    def run(noise):
-        tmp = str(tmp_path / f"rb_{len(noise)}_{noise[-1]['probe_sec']}")
-        _os = __import__("os")
-        _os.makedirs(_os.path.join(tmp, "tools"), exist_ok=True)
-        _shutil.copy(
-            _os.path.join(_REPO, "tools", "record_band.py"),
-            _os.path.join(tmp, "tools", "record_band.py"),
-        )
-        with open(_os.path.join(tmp, "BENCH.json"), "w") as f:
-            _json.dump(
-                {
-                    "value": 1.0,
-                    "sf": 0.1,
-                    "queries": {"a": 1.0},
-                    "loadavg_at_min": {"a": 1.0},
-                    "noise": noise,
-                    "errors": {},
-                },
-                f,
-            )
-        return _sp.run(
-            [_sys.executable, _os.path.join(tmp, "tools", "record_band.py"), "t"],
-            capture_output=True,
-            text=True,
-        )
-
-    quiet_steady = [
-        # ALL of pass 1 hot (the C2 storm inflates the all-sample
-        # median past the gate too — both gates must be steady-based)
-        {"pass": 1, "loadavg_1m": 1.0, "probe_sec": 0.9},
-        {"pass": 1, "loadavg_1m": 1.2, "probe_sec": 0.8},
-        {"pass": 1, "loadavg_1m": 2.0, "probe_sec": 1.1},
-        {"pass": 2, "loadavg_1m": 5.0, "probe_sec": 0.03},
-        {"pass": 3, "loadavg_1m": 5.0, "probe_sec": 0.04},
-        {"pass": "end", "loadavg_1m": 2.0, "probe_sec": 0.03},
-    ]
-    r = run(quiet_steady)
-    assert r.returncode == 0, r.stdout + r.stderr
-
-    hot_steady = [dict(s) for s in quiet_steady]
-    hot_steady[2] = {"pass": 3, "loadavg_1m": 5.0, "probe_sec": 0.7}
-    r = run(hot_steady)
-    assert r.returncode == 1 and "refusing" in r.stdout
-
-
-# ---------------------------------------------------------------------------
-# 8. bench retime/requalify
-# ---------------------------------------------------------------------------
-
-
-def test_flag_rows_mechanics():
-    from tools.retime import flag_rows
-
-    band = {"a": 1.0, "b": 2.0, "c": 0.5}
-    timings = {"a": 1.34, "b": 2.8, "c": 0.68, "d": 9.9}  # d has no band
-    flagged = flag_rows(timings, band, factor=1.35)
-    assert flagged == {"b": 1.4, "c": 1.36}, "over-band rows only, with the ratio"
-
-
-def test_flag_rows_caps_to_worst():
-    from tools.retime import flag_rows
-
-    band = {f"q{i}": 1.0 for i in range(40)}
-    timings = {f"q{i}": 2.0 + i * 0.01 for i in range(40)}
-    flagged = flag_rows(timings, band, factor=1.35, cap=5)
-    assert len(flagged) == 5
-    assert set(flagged) == {f"q{i}" for i in range(35, 40)}, "keep the WORST rows"
-
-
-def test_requalify_retimes_flagged_rows(spark):
-    from tools.retime import requalify
-
-    def q(s, d):
-        return s.range(1000).selectExpr("sum(id) AS s")
-
-    rec = requalify(
-        spark,
-        SF_SMOKE,
-        {"toy": q},
-        {"toy": 2.5},
-        {"toy": 4.0},
-        runs=2,
-    )
-    row = rec["toy"]
-    assert row["band"] == 2.5 and row["bench_min"] == 4.0 and row["ratio"] == 1.6
-    assert len(row["retime_runs"]) == 2
-    assert row["retime_min"] == min(row["retime_runs"])
-    assert row["retime_min"] > 0
-    assert "probe_sec" in row and "loadavg_1m" in row

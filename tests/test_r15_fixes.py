@@ -1,17 +1,6 @@
 """r15 regression pins.
 
-  1. retime probe-honesty (VERDICT r14 nit #2 / next-round #3): a
-     re-time whose own dgemm probes are hot retries up to the bounded
-     attempt budget; if every attempt is contaminated the record says
-     ``inconclusive`` instead of presenting a loaded number as
-     adjudication evidence. r14 recorded two such contaminated
-     re-times (dedup_containment_ngram, fuzzy_part_name_pairs with
-     0.21 s after-probes against a ~0.03 s idle floor).
-  2. Zero-floor visibility (ADVICE r14): a quiet-band floor recorded
-     as 0.0 no longer makes the row silently unflaggable —
-     ``flag_rows`` guards explicitly and ``requalify`` records the
-     row as ``{"zero_floor": true}`` in the evidence map.
-  3. Staging memo hygiene (ADVICE r14): flipping
+  1. Staging memo hygiene (ADVICE r14): flipping
      SPARK_GRAFT_CHECKPOINT_DIR to a DIFFERENT path mid-session
      re-routes new materializations (the isEmpty()-only check silently
      ignored dir-to-dir flips); clear_index_memo deletes durable
@@ -30,129 +19,8 @@ import threading
 from .conftest import SF_SMOKE
 
 
-def _toy_query(s, d):
-    return s.range(1000).selectExpr("sum(id) AS s")
-
-
 # ---------------------------------------------------------------------------
-# 1. probe-honest requalification
-# ---------------------------------------------------------------------------
-
-
-def _patch_probes(monkeypatch, values):
-    """Feed a fixed sequence into tools.retime._idle_probe; repeats
-    the last value once the scripted sequence is exhausted."""
-    import tools.retime as R
-
-    seq = list(values)
-
-    def fake_probe():
-        return seq.pop(0) if len(seq) > 1 else seq[0]
-
-    monkeypatch.setattr(R, "_idle_probe", fake_probe)
-
-
-def test_requalify_retries_until_probes_idle(spark, monkeypatch):
-    """First attempt contaminated (hot after-probe) → a second attempt
-    with idle probes replaces it; no inconclusive marker, one hot try
-    counted."""
-    from tools.retime import requalify
-
-    # attempt 1: before 0.03 / after 0.25 (hot) — attempt 2: 0.03/0.03.
-    _patch_probes(monkeypatch, [0.03, 0.25, 0.03, 0.03])
-    rec = requalify(
-        spark,
-        SF_SMOKE,
-        {"toy": _toy_query},
-        {"toy": 2.5},
-        {"toy": 4.0},
-        runs=1,
-        attempts=3,
-    )["toy"]
-    assert "inconclusive" not in rec
-    assert rec["attempts_probe_hot"] == 1
-    assert rec["probe_sec"] == 0.03 and rec["probe_sec_after"] == 0.03
-    assert rec["retime_min"] > 0 and rec["ratio"] == 1.6
-
-
-def test_requalify_marks_inconclusive_when_probes_stay_hot(spark, monkeypatch):
-    """Every attempt contaminated → bounded attempts, then the least-
-    contaminated attempt is kept and flagged inconclusive."""
-    from tools.retime import requalify
-
-    # Three attempts, all hot; the middle one is least hot (0.12) so
-    # its probes must be the ones kept. The r16 end-of-pass retry then
-    # takes one more attempt (probes repeat the scripted tail: 0.40,
-    # still hot), which bumps the hot counter to 4 without unseating
-    # the least-contaminated record — tested clean-side in
-    # tests/test_r16_fixes.py.
-    _patch_probes(monkeypatch, [0.30, 0.25, 0.12, 0.10, 0.40, 0.40])
-    rec = requalify(
-        spark,
-        SF_SMOKE,
-        {"toy": _toy_query},
-        {"toy": 2.5},
-        {"toy": 4.0},
-        runs=1,
-        attempts=3,
-    )["toy"]
-    assert rec["inconclusive"] is True
-    assert rec["attempts_probe_hot"] == 4
-    assert rec["probe_sec"] == 0.12 and rec["probe_sec_after"] == 0.10
-    assert "retime_min" in rec, "the least-bad re-time is still recorded"
-
-
-def test_requalify_single_clean_attempt_unchanged(spark, monkeypatch):
-    """Idle probes on the first attempt → exactly the r14 record shape
-    (no inconclusive, no attempts_probe_hot keys)."""
-    from tools.retime import requalify
-
-    _patch_probes(monkeypatch, [0.03, 0.03])
-    rec = requalify(
-        spark,
-        SF_SMOKE,
-        {"toy": _toy_query},
-        {"toy": 2.5},
-        {"toy": 4.0},
-        runs=2,
-    )["toy"]
-    assert "inconclusive" not in rec and "attempts_probe_hot" not in rec
-    assert rec["band"] == 2.5 and rec["bench_min"] == 4.0
-    assert len(rec["retime_runs"]) == 2
-
-
-# ---------------------------------------------------------------------------
-# 2. zero-floor rows are visible, not exempt
-# ---------------------------------------------------------------------------
-
-
-def test_flag_rows_zero_floor_guard():
-    from tools.retime import flag_rows, zero_floor_rows
-
-    band = {"a": 1.0, "z": 0.0}
-    timings = {"a": 2.0, "z": 9.9}
-    flagged = flag_rows(timings, band, factor=1.35)
-    assert flagged == {"a": 2.0}, "zero-floor row must not divide-by-zero or flag"
-    assert zero_floor_rows(timings, band) == ["z"]
-
-
-def test_requalify_records_zero_floor_rows(spark, monkeypatch):
-    from tools.retime import requalify
-
-    _patch_probes(monkeypatch, [0.03, 0.03])
-    out = requalify(
-        spark,
-        SF_SMOKE,
-        {"z": _toy_query},
-        {"z": 0.0},
-        {"z": 9.9},
-        runs=1,
-    )
-    assert out["z"] == {"zero_floor": True, "band": 0.0, "bench_min": 9.9}
-
-
-# ---------------------------------------------------------------------------
-# 3. staging memo hygiene
+# 1. staging memo hygiene
 # ---------------------------------------------------------------------------
 
 
@@ -264,7 +132,7 @@ def test_stage_builder_reentry_same_thread(spark):
 
 
 # ---------------------------------------------------------------------------
-# 4. feature_map_bundle: sentinel collision closed + tested state TTL
+# 2. feature_map_bundle: sentinel collision closed + tested state TTL
 # ---------------------------------------------------------------------------
 
 
@@ -407,82 +275,3 @@ def test_feature_map_bundle_default_no_ttl_semantics_unchanged(spark, tmp_path):
         name="r15_nottl",
     )
     assert (rows[2].type_occurrence, rows[2].events_so_far) == (2, 2)
-
-
-# ---------------------------------------------------------------------------
-# 5. record_band --merge-min: floors only ratchet DOWN
-# ---------------------------------------------------------------------------
-
-
-def test_record_band_merge_min_ratchets_floors_down(tmp_path):
-    """A gate-passing run can still carry burst landfall on individual
-    rows (probes sample between queries); with --merge-min each floor
-    is min(run, prior band) so a burst-hit row can't loosen its own
-    regression tripwire, while genuinely faster rows and new queries
-    record from the run."""
-    import json
-    import os
-    import shutil
-    import subprocess
-    import sys
-
-    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    tmp = str(tmp_path / "rbm")
-    os.makedirs(os.path.join(tmp, "tools"), exist_ok=True)
-    shutil.copy(
-        os.path.join(repo, "tools", "record_band.py"),
-        os.path.join(tmp, "tools", "record_band.py"),
-    )
-    quiet_noise = [
-        {"pass": 2, "loadavg_1m": 5.0, "probe_sec": 0.03},
-        {"pass": 3, "loadavg_1m": 5.0, "probe_sec": 0.035},
-    ]
-    with open(os.path.join(tmp, "BENCH.json"), "w") as f:
-        json.dump(
-            {
-                "value": 3.0,
-                "sf": 0.1,
-                # a: burst-inflated vs prior; b: faster than prior; c: new
-                "queries": {"a": 2.0, "b": 0.4, "c": 0.6},
-                "loadavg_at_min": {"a": 5.0, "b": 5.0, "c": 5.0},
-                "noise": quiet_noise,
-                "errors": {},
-            },
-            f,
-        )
-    with open(os.path.join(tmp, "QUIET_BAND.json"), "w") as f:
-        json.dump(
-            {
-                "queries": {
-                    "a": {"min": 0.5, "loadavg_at_min": 4.0},
-                    "b": {"min": 0.6, "loadavg_at_min": 4.0},
-                }
-            },
-            f,
-        )
-    r = subprocess.run(
-        [
-            sys.executable,
-            os.path.join(tmp, "tools", "record_band.py"),
-            "t",
-            "--merge-min",
-        ],
-        capture_output=True,
-        text=True,
-    )
-    assert r.returncode == 0, r.stdout + r.stderr
-    band = json.load(open(os.path.join(tmp, "QUIET_BAND.json")))["queries"]
-    assert band["a"] == {"min": 0.5, "loadavg_at_min": 4.0}, (
-        "inflated row keeps the tighter prior floor and its context"
-    )
-    assert band["b"]["min"] == 0.4, "faster row tightens"
-    assert band["c"]["min"] == 0.6, "new query records from the run"
-    # without --merge-min the run replaces wholesale (prior behavior)
-    r2 = subprocess.run(
-        [sys.executable, os.path.join(tmp, "tools", "record_band.py"), "t"],
-        capture_output=True,
-        text=True,
-    )
-    assert r2.returncode == 0
-    band2 = json.load(open(os.path.join(tmp, "QUIET_BAND.json")))["queries"]
-    assert band2["a"]["min"] == 2.0

@@ -9,20 +9,13 @@
      clear_index_memo / other-app eviction used to delete RLocks a
      build could be holding, so a same-key stage() after the clear
      minted a fresh lock and ran a duplicate concurrent build.
-  3. record_band --merge-min repairs zero floors (ADVICE r15 low): a
-     prior floor <= 0 is degenerate and must be REPLACED by a
-     qualifying run, not kept as "tighter" forever.
-  4. Re-times are staging-memo-honest (VERDICT r15 #3): each
-     requalified row records whether the corpus-staging memo was warm,
-     so a cold-memo re-time of a staged consumer is adjudicated as a
-     build cost, not a plan regression.
-  5. Inconclusive requalification rows get one end-of-pass retry
-     (VERDICT r15 #5): a clean late attempt replaces the contaminated
-     record; a hot one keeps the inconclusive marker honest.
-  6. Pre-r15 state-key migration (ADVICE r15 low): a stream resumed
+  3. memo_entries is scoped to one corpus and application, so a
+     caller counting warm staging entries never reads another
+     corpus's stages.
+  4. Pre-r15 state-key migration (ADVICE r15 low): a stream resumed
      from a pre-r15 checkpoint rewrites raw/"\\x00null" keys into the
      injective r15 format on first read — occurrence chains continue.
-  7. TTL knife-edge (VERDICT r15 #6): an event arriving in the same
+  5. TTL knife-edge (VERDICT r15 #6): an event arriving in the same
      micro-batch in which the key's ProcessingTimeTimeout would fire
      WINS — Spark never times out a key that has data in the batch —
      so the bundle continues instead of resetting.
@@ -35,11 +28,7 @@ import os
 import threading
 
 from .conftest import SF_SMOKE
-from .test_r15_fixes import _ev, _patch_probes, _replay_batches
-
-
-def _toy_query(s, d):
-    return s.range(1000).selectExpr("sum(id) AS s")
+from .test_r15_fixes import _ev, _replay_batches
 
 
 # ---------------------------------------------------------------------------
@@ -207,171 +196,14 @@ def test_other_app_insert_evicts_frames_but_not_locks(spark):
 
 
 # ---------------------------------------------------------------------------
-# 3. record_band --merge-min repairs zero floors
+# 3. memo_entries scope
 # ---------------------------------------------------------------------------
-
-
-def test_record_band_merge_min_replaces_zero_floor(tmp_path):
-    """A prior floor of 0.0 (sub-millisecond rounding pathology) must
-    be replaced by the qualifying run's real timing under --merge-min —
-    `0.0 < t` is true for every real timing, so without the explicit
-    guard a zero floor could never be repaired (ADVICE r15)."""
-    import json
-    import shutil
-    import subprocess
-    import sys
-
-    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    tmp = str(tmp_path / "rbz")
-    os.makedirs(os.path.join(tmp, "tools"), exist_ok=True)
-    shutil.copy(
-        os.path.join(repo, "tools", "record_band.py"),
-        os.path.join(tmp, "tools", "record_band.py"),
-    )
-    with open(os.path.join(tmp, "BENCH.json"), "w") as f:
-        json.dump(
-            {
-                "value": 1.0,
-                "sf": 0.1,
-                "queries": {"z": 0.8, "a": 0.2},
-                "loadavg_at_min": {"z": 5.0, "a": 5.0},
-                "noise": [
-                    {"pass": 2, "loadavg_1m": 5.0, "probe_sec": 0.03},
-                    {"pass": 3, "loadavg_1m": 5.0, "probe_sec": 0.035},
-                ],
-                "errors": {},
-            },
-            f,
-        )
-    with open(os.path.join(tmp, "QUIET_BAND.json"), "w") as f:
-        json.dump(
-            {
-                "queries": {
-                    "z": {"min": 0.0, "loadavg_at_min": 4.0},
-                    "a": {"min": 0.1, "loadavg_at_min": 4.0},
-                }
-            },
-            f,
-        )
-    r = subprocess.run(
-        [
-            sys.executable,
-            os.path.join(tmp, "tools", "record_band.py"),
-            "t",
-            "--merge-min",
-        ],
-        capture_output=True,
-        text=True,
-    )
-    assert r.returncode == 0, r.stdout + r.stderr
-    band = json.load(open(os.path.join(tmp, "QUIET_BAND.json")))["queries"]
-    assert band["z"]["min"] == 0.8, "zero floor must be repaired by the run"
-    assert band["a"]["min"] == 0.1, "a real tighter prior floor still wins"
-
-
-def test_record_band_merge_min_keeps_positive_prior_over_zero_run(tmp_path):
-    """The mirror image of the zero-floor repair (review r16): a
-    qualifying run whose timing for a query ROUNDED TO 0.0 (the same
-    sub-millisecond pathology, current-side) must not replace a real
-    positive prior floor — that would plant the un-flaggable zero the
-    repair guard exists to remove, violating 'floors only ratchet
-    down' (down means toward real timings, not toward zero)."""
-    import json
-    import shutil
-    import subprocess
-    import sys
-
-    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    tmp = str(tmp_path / "rbzc")
-    os.makedirs(os.path.join(tmp, "tools"), exist_ok=True)
-    shutil.copy(
-        os.path.join(repo, "tools", "record_band.py"),
-        os.path.join(tmp, "tools", "record_band.py"),
-    )
-    with open(os.path.join(tmp, "BENCH.json"), "w") as f:
-        json.dump(
-            {
-                "value": 1.0,
-                "sf": 0.1,
-                # a: run rounds to zero, prior is real; b: both zero
-                "queries": {"a": 0.0, "b": 0.0},
-                "loadavg_at_min": {"a": 5.0, "b": 5.0},
-                "noise": [
-                    {"pass": 2, "loadavg_1m": 5.0, "probe_sec": 0.03},
-                    {"pass": 3, "loadavg_1m": 5.0, "probe_sec": 0.035},
-                ],
-                "errors": {},
-            },
-            f,
-        )
-    with open(os.path.join(tmp, "QUIET_BAND.json"), "w") as f:
-        json.dump(
-            {
-                "queries": {
-                    "a": {"min": 0.1, "loadavg_at_min": 4.0},
-                    "b": {"min": 0.0, "loadavg_at_min": 4.0},
-                }
-            },
-            f,
-        )
-    r = subprocess.run(
-        [
-            sys.executable,
-            os.path.join(tmp, "tools", "record_band.py"),
-            "t",
-            "--merge-min",
-        ],
-        capture_output=True,
-        text=True,
-    )
-    assert r.returncode == 0, r.stdout + r.stderr
-    band = json.load(open(os.path.join(tmp, "QUIET_BAND.json")))["queries"]
-    assert band["a"] == {"min": 0.1, "loadavg_at_min": 4.0}, (
-        "a zero-rounded run timing must not displace a real prior floor"
-    )
-    assert band["b"]["min"] == 0.0, (
-        "both-degenerate stays zero (and stays visible to zero_floor_rows)"
-    )
-
-
-# ---------------------------------------------------------------------------
-# 4. re-times record staging-memo warmth
-# ---------------------------------------------------------------------------
-
-
-def test_requalify_records_memo_state(spark, monkeypatch):
-    from bigdata_riveranalysis_spark.plans import staging as S
-    from tools.retime import requalify
-
-    S.clear_index_memo()
-    _patch_probes(monkeypatch, [0.03, 0.03])
-    rec = requalify(
-        spark,
-        SF_SMOKE,
-        {"toy": _toy_query},
-        {"toy": 2.5},
-        {"toy": 4.0},
-        runs=1,
-    )["toy"]
-    assert rec["memo_warm"] is False and rec["memo_entries"] == 0
-
-    S.stage(spark, SF_SMOKE, "r16_memo_probe", lambda: spark.range(3))
-    rec = requalify(
-        spark,
-        SF_SMOKE,
-        {"toy": _toy_query},
-        {"toy": 2.5},
-        {"toy": 4.0},
-        runs=1,
-    )["toy"]
-    assert rec["memo_warm"] is True and rec["memo_entries"] == 1
-    S.clear_index_memo()
 
 
 def test_memo_entries_scoped_to_corpus_and_app(spark):
     """memo_entries counts only THIS application's stages for the
-    queried corpus — a bench re-time at sf0.1 must not read sf0.01
-    test stages as warmth."""
+    queried corpus — a caller at sf0.1 must not read sf0.01 test
+    stages as warmth."""
     from bigdata_riveranalysis_spark.plans import staging as S
 
     S.clear_index_memo()
@@ -383,82 +215,7 @@ def test_memo_entries_scoped_to_corpus_and_app(spark):
 
 
 # ---------------------------------------------------------------------------
-# 5. end-of-pass retry for inconclusive rows
-# ---------------------------------------------------------------------------
-
-
-def test_requalify_late_retry_rescues_inconclusive(spark, monkeypatch):
-    """All in-loop attempts hot → inconclusive; the end-of-pass retry
-    lands clean → the clean attempt REPLACES the contaminated record,
-    marked late_retry, with the in-loop hot count preserved."""
-    from tools.retime import requalify
-
-    _patch_probes(
-        monkeypatch,
-        [0.30, 0.25, 0.12, 0.10, 0.40, 0.40, 0.03, 0.03],
-    )
-    rec = requalify(
-        spark,
-        SF_SMOKE,
-        {"toy": _toy_query},
-        {"toy": 2.5},
-        {"toy": 4.0},
-        runs=1,
-        attempts=3,
-    )["toy"]
-    assert "inconclusive" not in rec
-    assert rec["late_retry"] is True
-    assert rec["attempts_probe_hot"] == 3
-    assert rec["probe_sec"] == 0.03 and rec["probe_sec_after"] == 0.03
-    assert rec["band"] == 2.5 and rec["bench_min"] == 4.0 and rec["ratio"] == 1.6
-    assert "retime_min" in rec
-
-
-def test_requalify_late_retry_errored_attempt_keeps_record(spark, monkeypatch):
-    """A late retry whose query execution ERRORS reads idle probes —
-    nothing ran — so it must NOT replace the contaminated-but-measured
-    in-loop record (review r16: the probe-only guard would have
-    produced a 'clean' requalification with no timing and no
-    inconclusive flag). The prior record survives intact, annotated
-    with the failed retry; the idle probes also must not bump the
-    hot-attempt counter."""
-    from tools.retime import requalify
-
-    calls = {"n": 0}
-
-    def flaky(spark_, sf_dir):
-        calls["n"] += 1
-        # runs=1 → 2 executions per attempt; 3 in-loop attempts = 6
-        # calls succeed, the late retry (calls 7+) raises.
-        if calls["n"] > 6:
-            raise RuntimeError("late-retry boom")
-        return _toy_query(spark_, sf_dir)
-
-    _patch_probes(
-        monkeypatch,
-        [0.30, 0.25, 0.12, 0.10, 0.40, 0.40, 0.03, 0.03],
-    )
-    rec = requalify(
-        spark,
-        SF_SMOKE,
-        {"toy": flaky},
-        {"toy": 2.5},
-        {"toy": 4.0},
-        runs=1,
-        attempts=3,
-    )["toy"]
-    assert rec["inconclusive"] is True, "contaminated record must survive"
-    assert "retime_min" in rec, "the least-bad in-loop measurement is kept"
-    assert rec["probe_sec"] == 0.12 and rec["probe_sec_after"] == 0.10
-    assert "late_retry" not in rec
-    assert "boom" in rec["late_retry_err"]
-    assert rec["attempts_probe_hot"] == 3, (
-        "an errored clean-probe retry is not a HOT attempt"
-    )
-
-
-# ---------------------------------------------------------------------------
-# 6. pre-r15 state-key migration
+# 4. pre-r15 state-key migration
 # ---------------------------------------------------------------------------
 
 
@@ -487,7 +244,7 @@ def test_migrate_state_keys_rewrites_legacy_formats():
 
 
 # ---------------------------------------------------------------------------
-# 7. TTL knife-edge: data in the expiry batch beats the timeout
+# 5. TTL knife-edge: data in the expiry batch beats the timeout
 # ---------------------------------------------------------------------------
 
 
@@ -536,7 +293,7 @@ def _replay_session_batches(spark, tmp_path, batches, *, name, timeout=180):
 
 
 # ---------------------------------------------------------------------------
-# 8. EventTimeTimeout session fold: measured boundary semantics
+# 6. EventTimeTimeout session fold: measured boundary semantics
 # ---------------------------------------------------------------------------
 
 

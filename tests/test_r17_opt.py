@@ -247,6 +247,27 @@ def test_stream_stream_join_skips_no_data_batch_same_rows(spark):
     )
 
 
+def test_run_stream_without_skip_leaves_nodata_conf_alone(spark, tmp_path):
+    """Only a skip_no_data_batch run touches the no-data-batch conf; a
+    default run keeps whatever value the session set."""
+    from bigdata_riveranalysis_spark.plans.streaming_queries import _run_stream
+
+    key = "spark.sql.streaming.noDataMicroBatches.enabled"
+    src = tmp_path / "src"
+    src.mkdir()
+    (src / "a.txt").write_text("x\ny\n")
+    prev = spark.conf.get(key, "true")
+    spark.conf.set(key, "false")
+    try:
+        out = _run_stream(
+            spark.readStream.text(str(src)), spark, "append", "nodata_conf_scope"
+        )
+        assert out.count() == 2
+        assert spark.conf.get(key) == "false"
+    finally:
+        spark.conf.set(key, prev)
+
+
 def _old_ewma_reference(pdf, alpha=0.3, spike_ratio=3.0):
     """Verbatim r16 ewma group fold (sort_values + Series iteration +
     list appends) — the parity reference for the r17 numpy-machinery

@@ -563,6 +563,67 @@ def test_upsert_sink_pointer_migrates_legacy_rename_table(spark, tmp_path):
     assert not os.path.exists(out)  # legacy dir retired
 
 
+def _wire(day, name, ph):
+    return json.dumps({
+        "FullDate": day, "WaterbodyName": name, "pH": ph,
+        "Dissolved Oxygen": "90.0", "Conductivity @25°C": "400.0",
+    })
+
+
+#: Three wire-format files, one micro-batch each; every file carries
+#: one malformed line, which parses to a NULL sensor_id.
+_WIRE_BATCHES = [
+    [_wire("2007-01-01", "A", "7.0"), _wire("2007-01-01", "B", "7.1"), "{not json"],
+    [_wire("2007-01-02", "A", "7.2"), "{not json"],
+    [_wire("2007-01-03", "B", "7.3"), _wire("2007-01-03", "C", "7.4"), "{not json"],
+]
+
+
+def _run_wire_upsert(spark, tmp_path, commit):
+    from bigdata_riveranalysis_spark.operators.river_pipeline import (
+        parse_readings,
+        wqi_classify,
+    )
+    from bigdata_riveranalysis_spark.streaming.sinks import (
+        read_serving_table,
+        start_upsert_sink,
+    )
+
+    src = tmp_path / "wire"
+    src.mkdir()
+    t0 = time.time() - len(_WIRE_BATCHES)
+    for i, lines in enumerate(_WIRE_BATCHES):
+        p = src / f"tick_{i:03d}.json"
+        p.write_text("\n".join(lines) + "\n")
+        os.utime(p, (t0 + i, t0 + i))
+    readings = wqi_classify(parse_readings(
+        spark.readStream.option("maxFilesPerTrigger", "1").text(str(src))
+    ))
+    out = str(tmp_path / "serve")
+    q = start_upsert_sink(readings, out, str(tmp_path / "ckpt"), ("sensor_id",),
+                          trigger_available_now=True, commit=commit)
+    assert q.awaitTermination(120), "streaming query timed out (partial sink)"
+    return read_serving_table(spark, out).collect(), q.recentProgress
+
+
+@pytest.mark.parametrize("commit", ["rename", "pointer"])
+def test_upsert_sink_drops_null_key_rows(spark, tmp_path, commit):
+    """A NULL key never equals another, so without the drop every
+    malformed line would add one more row to the serving table."""
+    rows, _ = _run_wire_upsert(spark, tmp_path, commit)
+    assert [r for r in rows if r.sensor_id is None] == []
+    assert {r.sensor_id: r.ph_value for r in rows} == {"A": 7.2, "B": 7.3, "C": 7.4}
+
+
+@pytest.mark.parametrize("commit", ["rename", "pointer"])
+def test_upsert_sink_reads_each_batch_once(spark, tmp_path, commit):
+    """The merge needs the batch's keys and its rows; the source must
+    still be scanned once per micro-batch."""
+    _, progress = _run_wire_upsert(spark, tmp_path, commit)
+    got = [p["numInputRows"] for p in progress]
+    assert got == [len(lines) for lines in _WIRE_BATCHES]
+
+
 def test_observe_metrics_on_batch_query(spark):
     """df.observe: accumulator-style metrics ride the job (no second
     scan) — the operational hook a 100 TB pipeline uses to assert

@@ -162,52 +162,12 @@ def main() -> int:
         _audit_row(name, q)
 
     with open(os.path.join(_REPO, "PLANS.md"), "w") as f:  # cwd-independent
-        f.write("\n".join(lines) + "\n" + MEASURED_NOTES + _quiet_band_section())
+        f.write("\n".join(lines) + "\n" + MEASURED_NOTES)
     print(f"wrote PLANS.md ({len(REGISTRY)} registered + {len(RETIRED)} retired queries)")
     if offenders:
         print(f"FAIL: row-at-a-time Python or plan error in: {offenders}")
         return 1
     return 0
-
-
-def _quiet_band_section() -> str:
-    """Render the standing quiet-box per-query baseline band from the
-    committed QUIET_BAND.json (VERDICT r11/r12 task #4: one idle-load
-    min-of-3 pass over the whole registry, committed as a lookup
-    table so load-vs-regression adjudication stops being a per-round
-    recomputation). Data lives in the JSON — tools/record_band.py
-    snapshots it from a BENCH.json whose noise probes qualify — and
-    this renderer keeps the table alive across PLANS.md
-    regenerations, per the MEASURED_NOTES survival rule."""
-    import json
-
-    path = os.path.join(_REPO, "QUIET_BAND.json")
-    if not os.path.exists(path):
-        return ""
-    with open(path) as f:
-        band = json.load(f)
-    q = band["queries"]
-    rows = "\n".join(
-        f"| {n} | {q[n]['min']} | {q[n]['loadavg_at_min']} |" for n in sorted(q)
-    )
-    return f"""
-## Quiet-box per-query baseline band ({band['label']})
-
-Standing reference for load-vs-regression adjudication (VERDICT r11
-#5 / r12 #4): min-of-3 interleaved passes over all {len(q)} registered
-queries at sf={band['sf']}, recorded while the box was QUIET —
-loadavg span {band['loadavg_min']}–{band['loadavg_max']}, dgemm
-probe span {band['probe_min']}–{band['probe_max']} s (idle ≈ 0.025 s).
-Total {band['total']} s. A later bench row within ~1.35× of its band
-value under contaminated probes (probe ≫ 0.025 s) is LOAD; a row
-outside that with quiet probes is a plan regression — look at the
-plan, not the neighbors. Regenerate with tools/record_band.py after
-any intentional plan change. Source: {band['source']}.
-
-| query | quiet min (s) | loadavg@min |
-|---|---|---|
-{rows}
-"""
 
 
 #: Hand-measured findings that must SURVIVE regeneration (this tool
@@ -740,9 +700,9 @@ top-k cosine queries), refactor verified hash-identical. Fuzz record:
 
 ## Decimal128 exactness tax — measured A/B (r7, VERDICT r6 #5)
 
-`SPARK_GRAFT_LONG_SUMS=1` switches every `functions/exact.py` sum back
-to plain long aggregation (the pre-r6 overflow-prone path) as an A/B
-instrument. Full 112-query bench at sf0.1, min-of-3 interleaved, both
+A/B leg: every `functions/exact.py` sum run as plain long
+aggregation (the pre-r6 overflow-prone path; that switch is gone,
+the sums are always Decimal128). Full 112-query bench at sf0.1, min-of-3 interleaved, both
 runs on the shared box with the per-pass noise samples (`loadavg_1m`
 3.4-11.9, idle-probe 0.03-0.39 s vs ~0.025 s idle — i.e. both legs ran
 under comparable neighbor load):
@@ -830,9 +790,9 @@ local[32], loadavg < 3):
   composes on), `events_attribution_linear` ~0.7 s,
   `docs_interleave_schedule` ~0.4 s (closed-form global position — no
   single-reducer window), `sensor_trend_ols` ~0.4 s (one scan, one
-  groupBy; Σx² forces direct DECIMAL(38,0) sums — even the
-  SPARK_GRAFT_LONG_SUMS A/B leg would overflow a long here, so the
-  query ignores the switch by design).
+  groupBy; Σx² forces direct DECIMAL(38,0) sums — even a long-sum
+  A/B leg would overflow a long here, so the query casts to decimal
+  directly by design).
 """
 
 
