@@ -457,10 +457,10 @@ def dedup_incremental_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-#: Pair-graph size cap for the driver union-find regime of
-#: dedup_cluster_components: 2M edges × ~(two ids + overhead) ≈ low
-#: hundreds of MB on the driver — explicit and bounded, like
-#: JACCARD_LOCAL_*. Above it the distributed label-propagation loop runs.
+#: Pair-graph size cap for the driver union-find path of
+#: dedup_cluster_components (2M edges is low hundreds of MB on the
+#: driver). Measured at sf0.1 on local[4], LSH memo warm: 0.065 s
+#: local vs 0.78 s for the label-propagation loop.
 COMPONENTS_LOCAL_MAX_EDGES = 2_000_000
 
 
@@ -492,38 +492,24 @@ def _lsh_pairs_oracle() -> str:
     """,
 )
 def dedup_cluster_components(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Connected components over the near-dup pair graph — the final
-    stage of fuzzy dedup: pairwise matches become CLUSTERS, each doc
-    labeled with its component's canonical (minimum) doc_id, so
-    keep-one-per-cluster is a trivial filter.
+    """Connected components over the near-dup pair graph: each doc
+    in a dedup_minhash_lsh pair is labeled with its component's
+    minimum doc_id, so keep-one-per-cluster is a filter.
 
-    Regimes (both produce the identical labeling):
-      * **Local** (pair count ≤ COMPONENTS_LOCAL_MAX_EDGES): the pair
-        graph — NOT the corpus — is collected and union-find runs on
-        the driver. Near-dup pairs are sparse relative to documents
-        (only actual duplicates appear), so even a very large corpus
-        usually yields a graph of thousands of edges; the gate bounds
-        driver memory explicitly, mirroring JACCARD_LOCAL_*.
-      * **Distributed** (above the gate): iterative min-label
-        propagation — per round one join (labels→neighbors) folded
-        into a single min-aggregate, lineage cut with localCheckpoint
-        (storage-level checkpoint on a real cluster); convergence
-        tested with a LIMIT-1 existence probe, not a full count.
-        Rounds = graph diameter; near-dup components are shallow so
-        this converges in 2-4 rounds. The large-star/small-star
-        rewrites (O(log n) rounds) are the drop-in upgrade if a
-        pathological corpus ever yields deep components.
+    Two paths, identical labelings:
+      * **local** (pair count ≤ COMPONENTS_LOCAL_MAX_EDGES): the pair
+        graph, not the corpus, is collected and union-find runs on the
+        driver with the min id as root.
+      * **distributed**: min-label propagation, one join and one min
+        aggregate per round, lineage cut with localCheckpoint, stopped
+        by a LIMIT-1 probe for any improved label. Rounds = component
+        diameter.
 
-    The DuckDB oracle computes the same fixpoint declaratively with a
-    recursive CTE over the registered LSH-pair SQL (min reachable id
-    == component minimum).
-
-    The labeling is memoized per (application, corpus): it is the
-    shared input of dedup_keep_best and dedup_pipeline_summary, which
-    previously each re-ran LSH + components wholesale. Cluster rows ≪
-    corpus (only actual duplicates appear), so the checkpoint is
-    small. A test that re-gates the regime on an already-memoized
-    corpus must clear_index_memo() first (tests/test_properties.py).
+    The oracle computes the same fixpoint with a recursive CTE over
+    the registered LSH-pair SQL. The labeling is memoized per
+    (application, corpus) as the shared input of dedup_keep_best and
+    dedup_pipeline_summary; a test that re-gates the path on a
+    memoized corpus must call clear_index_memo() first.
     """
     return _index_stage(
         spark,
@@ -618,11 +604,13 @@ def _components_distributed(pairs: DataFrame) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-#: Local-regime gates for exact Jaccard, all checked before any heavy
-#: work: corpus text volume (bounds the one Arrow collect), doc count
-#: (bounds the pair matrix), docs × vocab cells (bounds the dense
-#: matrix), and total matmul FLOPs (bounds local compute). Outside any
-#: gate the operator stays on the distributed inverted-index plan.
+#: Local-path gates of the shingle-pair kernel (Jaccard and
+#: containment): corpus text volume (bounds the one Arrow collect),
+#: doc count (bounds the pair matrix), docs × vocab cells (bounds the
+#: dense matrix) and matmul FLOPs (bounds local compute). Outside any
+#: gate the inverted-index plan runs. Measured at sf0.1 on local[4]:
+#: Jaccard 0.91 s local vs 36.4 s distributed, containment 0.78 s vs
+#: 40.1 s.
 JACCARD_LOCAL_MAX_TEXT_BYTES = 64_000_000
 JACCARD_LOCAL_MAX_DOCS = 20_000
 JACCARD_LOCAL_MAX_CELLS = 32_000_000
@@ -651,20 +639,17 @@ JACCARD_DF_CAP_SQL = (
     f"count(*) // 5)) FROM documents)"
 )
 
-#: Cells per sweep tile in the local path (caps the block×n temps at
-#: ~256 MB of f32). Derived per-call: block = cells // n, so the
-#: 5000-doc bench corpus runs as ONE tile — measured 2.5× faster than
-#: fixed 2048-row tiles (BLAS parallelizes one big sgemm better than
-#: three slivers, and the Python-side temp churn triples).
-_JACCARD_SWEEP_CELLS = 64_000_000
+#: Cells per row-chunk of a pairwise similarity sweep (the dense
+#: shingle tiles and the embedding grid tiles): chunk rows = cells //
+#: columns, so a sweep's temporaries stay bounded at any size while
+#: the 5000-doc sf0.1 corpus still runs as one chunk (one big GEMM
+#: measured 2.5× faster than fixed 2048-row chunks).
+_SWEEP_CELLS = 64_000_000
 
 
 def _dense_shingle_matrix(sh: DataFrame, df_cap: int, vocab_cap: int):
-    """Shared local-dense setup for _jaccard_local/_containment_local
-    (factored r8 — the two verbatim copies of the collect/factorize/
-    matrix-build/df-cap block previously had to be edited in sync,
-    the same drift class _band_rows already got fixed for): one
-    Arrow-batched collect of the shingle sets, a pd.factorize vocab
+    """Shared local-dense setup for _jaccard_local/_containment_local:
+    one Arrow-batched collect of the shingle sets, a pd.factorize vocab
     index, the 0/1 f32 (docs × vocab) matrix, df-cap column zeroing,
     and the post-cap size recompute.
 
@@ -703,38 +688,18 @@ def _dense_shingle_matrix(sh: DataFrame, df_cap: int, vocab_cap: int):
 
 
 def _jaccard_local(spark: SparkSession, sh: DataFrame, df_cap: int) -> DataFrame | None:
-    """Exact all-pairs Jaccard in the local (small-corpus) regime.
+    """Exact all-pairs Jaccard, local path of _shingle_pair_query.
 
-    One Arrow-batched job computes the shingle sets; everything after
-    is vectorized numpy: `pd.factorize` builds the vocab index in C,
-    the sets become a 0/1 float32 (docs × vocab) matrix, and a blocked
-    matmul yields |A∩B| exactly (binary dot products; counts ≤ 2^24
-    are exact in f32).
-
-    This is the same cost-based escape hatch as Catalyst's broadcast
-    join: below the gates, the whole problem is smaller than the
-    per-job overhead of a distributed plan (measured: five tokenizing
-    jobs cost more in codegen+scheduling than the entire matmul), so
-    the engine computes it where the data already fits. Returns None
-    when post-collect stats exceed the dense gates — the caller then
-    runs the distributed plan.
-
-    The tile sweep preallocates its two tile buffers and thresholds
-    in place in integer-only f32 (see the loop comment): the per-tile
-    temporaries, not BLAS, were the run-to-run variance, and survivor
-    counts come exactly from the tile buffer.
+    One Arrow-batched job collects the shingle sets
+    (_dense_shingle_matrix); a row-chunked binary matmul yields |A∩B|
+    exactly (counts ≤ 2^24 are exact in f32), thresholded in place in
+    integer-only f32 into two preallocated chunk buffers. Returns None
+    when the dense gates say the distributed plan must run.
     """
     import numpy as np
     import pandas as pd
 
     out_schema = "doc_a long, doc_b long, jaccard double"
-    # _JACCARD_VOCAB_CAP: exactness bound for the fused f32 threshold
-    # — every scaled tile operand ((p+q)·common, p·size ≤ (p+q)·nv)
-    # must stay an exact f32 integer (< 2^24). At t=1/2 this is
-    # 2^24/3 = 5 592 405 (the old ≤2^23 gate admitted common up to
-    # 8.3M, where a pair sitting exactly on the J=0.5 boundary could
-    # flip vs the oracle — ADVICE r7). A ≥5.6M-gram vocab at n≤4 docs
-    # is a degenerate shape anyway; distributed path.
     dense = _dense_shingle_matrix(sh, df_cap, _JACCARD_VOCAB_CAP)
     if dense is None:
         return None
@@ -745,14 +710,10 @@ def _jaccard_local(spark: SparkSession, sh: DataFrame, df_cap: int) -> DataFrame
     out_a, out_b, out_j = [], [], []
     # p·|·| as exact integer-valued f32 (p·nv < 2^24 under the gate).
     psizes32 = sizes.astype(np.float32) * np.float32(JACCARD_THRESHOLD_NUM)
-    block = max(1, _JACCARD_SWEEP_CELLS // max(n, 1))
-    # Preallocated tile buffers + in-place ops (r8): the r7 sweep's
-    # cost was NOT the GEMM (0.2-0.4 s) but the per-tile temporaries —
-    # np.add.outer's 100 MB ssum, the scaled copies, the bool temp —
-    # whose allocate/zero/free traffic swung 0.6→3.0 s run-to-run
-    # under memory pressure (profiled segment-by-segment, loadavg
-    # ≤1.9). One GEMM output and one bool buffer are reused across
-    # tiles; everything else is in-place.
+    block = max(1, _SWEEP_CELLS // max(n, 1))
+    # One GEMM output and one bool buffer are reused across chunks;
+    # everything else is in place (per-chunk temporaries, not the
+    # GEMM, were the sweep's cost and its run-to-run variance).
     nb = min(block, n)
     common = np.empty((nb, n), dtype=np.float32)
     cand = np.empty((nb, n), dtype=bool)
@@ -760,19 +721,13 @@ def _jaccard_local(spark: SparkSession, sh: DataFrame, df_cap: int) -> DataFrame
         stop = min(start + block, n)
         cb, kb = common[: stop - start], cand[: stop - start]
         np.matmul(M[start:stop], M.T, out=cb)
-        # Threshold in INTEGER-only f32 (ADVICE r7's alternative
-        # form): with t = p/q,
+        # Threshold in integer-only f32: with t = p/q,
         #   J ≥ t ⟺ q·common ≥ p·(ssum − common) ⟺ (p+q)·common ≥ p·ssum
-        # evaluated in-place as (p+q)·common − p·|B| ≥ p·|A|, with
-        # p+q = _JACCARD_TILE_COEF derived from the SAME rational the
-        # distributed filter and oracle use (review finding r8: the
-        # coefficient was previously hardcoded for t=1/2). Every
-        # operand is an integer-valued f32: (p+q)·common ≤ (p+q)·nv
-        # < 2^24 stays exact under the _JACCARD_VOCAB_CAP gate, and
-        # the subtraction keeps integer magnitudes < 2^24 — no
-        # half-integers anywhere, so the boundary cannot flip. The
-        # |A|+|B| > 0 guard (ssum=0 would vacuously pass) moves to
-        # the few survivors below.
+        # evaluated in place as (p+q)·common − p·|B| ≥ p·|A|, with
+        # p+q = _JACCARD_TILE_COEF. Every operand is an integer-valued
+        # f32 < 2^24 under the _JACCARD_VOCAB_CAP gate, so the
+        # boundary cannot flip against the oracle. The |A|+|B| > 0
+        # guard (ssum=0 would vacuously pass) runs on the survivors.
         cb *= np.float32(_JACCARD_TILE_COEF)
         cb -= psizes32[None, :]
         np.greater_equal(cb, psizes32[start:stop, None], out=kb)
@@ -782,13 +737,9 @@ def _jaccard_local(spark: SparkSession, sh: DataFrame, df_cap: int) -> DataFrame
         sa, sb = sizes[start + ai], sizes[bj]
         good = (sa + sb) > 0
         ai, bj, sa, sb = ai[good], bj[good], sa[good], sb[good]
-        # Exact survivor counts recovered FROM the tile buffer (review
-        # r8: an einsum recompute re-did O(survivors·vocab) of the
-        # GEMM at scalar speed — on dup-heavy corpora survivors are
-        # not few): cb holds coef·c − p·|B|, all integer-valued f32
-        # ≤ coef·nv < 2^24, so adding back p·|B| and dividing by the
-        # integer coef is exact (correctly-rounded division of exact
-        # integers whose true quotient is a representable integer).
+        # Exact survivor counts recovered from the chunk buffer: cb
+        # holds coef·c − p·|B|, integer-valued f32 < 2^24, so adding
+        # back p·|B| and dividing by the integer coef is exact.
         com = (
             (cb[ai, bj] + psizes32[bj]) / np.float32(_JACCARD_TILE_COEF)
         ).astype(np.float64)
@@ -799,7 +750,7 @@ def _jaccard_local(spark: SparkSession, sh: DataFrame, df_cap: int) -> DataFrame
         # Half-AWAY rounding (floor(x·10⁴ + 0.5), jaccard > 0), matching
         # Spark F.round (HALF_UP) and DuckDB round on the dyadic
         # half-boundaries (17/32 → 0.5313) where np.round's half-even
-        # would emit 0.5312 and break the regime-equality contract.
+        # would emit 0.5312.
         out_j.append(np.floor(jac * 1e4 + 0.5) / 1e4)
     res = pd.DataFrame(
         {
@@ -845,32 +796,62 @@ def _jaccard_local(spark: SparkSession, sh: DataFrame, df_cap: int) -> DataFrame
     """,
 )
 def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact word-bigram Jaccard near-dup pairs, with a stats-driven
-    physical strategy (both produce identical results):
+    """Exact word-bigram Jaccard near-dup pairs, J ≥ JACCARD_THRESHOLD
+    over df-capped shingle sets (_shingle_pair_query).
 
-    * **local dense** — when parquet footer metadata says the corpus
-      is tiny (see the JACCARD_LOCAL_* gates): factorize + blocked
-      binary matmul (_jaccard_local). The test corpus is exactly this
-      shape (931 bigrams shared by every document → the inverted
-      index degenerates to ~all-pairs with 931 hot join keys, a skew
-      lottery measured at 8-24 s, while the whole problem is <1 s of
-      BLAS).
-    * **inverted index** — the scale path: self-join on the shingle,
-      size-ratio prune in the join condition (J ≥ t ⇒ sizes within
-      1/t — exact), pair-count aggregation. Shuffle key is the
-      shingle; at 100 TB natural-text vocabularies are huge and
-      sparse, which is what this plan is shaped for.
+    Paths, identical pairs:
+      * **local dense** (below the JACCARD_LOCAL_* gates): factorize +
+        blocked binary matmul (_jaccard_local).
+      * **inverted index**: the gram self-join with a size-ratio prune
+        in the join condition. J(A,B) ≤ min/max of the set sizes, so
+        J ≥ p/q ⇒ p·|A| ≤ q·|B| and p·|B| ≤ q·|A|; the prune is exact
+        and in integer form, so no threshold can round differently
+        from the local tile test.
 
-    Both regimes (and the oracle) apply the JACCARD_DF_CAP_* document
-    frequency cap first: boilerplate grams (df > cap) are dropped from
-    the sets before sizing and intersection. The cap is the semantics
-    — similarity over discriminative shingles — and the scale defense:
-    one every-doc gram otherwise creates a df² hot bucket in the
-    inverted index (this corpus has 931 such bigrams).
+    Every threshold test is the integer q·common ≥ p·union, derived
+    from JACCARD_THRESHOLD_NUM/DEN in both paths and the oracle, and
+    the emitted value goes through the exact ratio_round4 identity.
+    """
+    p, q = JACCARD_THRESHOLD_NUM, JACCARD_THRESHOLD_DEN
+    ratio_ok = (F.col("a.n") * p <= F.col("b.n") * q) & (
+        F.col("b.n") * p <= F.col("a.n") * q
+    )
 
-    Deciding from measured stats is the same move Catalyst makes
-    choosing broadcast vs shuffle joins — the operator picks the
-    physical plan the data's shape demands.
+    def finish(common: DataFrame) -> DataFrame:
+        uni = F.col("na") + F.col("nb") - F.col("n_common")
+        return common.filter(F.col("n_common") * q >= uni * p).select(
+            "doc_a",
+            "doc_b",
+            EX.ratio_round4(F.col("n_common"), uni, 0).alias("jaccard"),
+        )
+
+    return _shingle_pair_query(spark, sf_dir, _jaccard_local, finish, ratio_ok)
+
+
+def _shingle_pair_query(
+    spark: SparkSession,
+    sf_dir: str,
+    local,
+    finish,
+    pair_cond: F.Column | None = None,
+) -> DataFrame:
+    """The shingle-pair kernel of dedup_ngram_jaccard and
+    dedup_containment_ngram.
+
+    Builds each document's distinct word-bigram set and the df cap
+    (JACCARD_DF_CAP_*: grams in more than cap documents are dropped
+    before sizing and intersection, in both paths and the oracles).
+    The gate reads parquet footer statistics only, so no Spark job
+    runs before the chosen plan: the rowcount and the text column's
+    uncompressed bytes, which upper-bound its characters.
+
+    Below the JACCARD_LOCAL_* gates it returns ``local(spark, sh,
+    df_cap)`` unless that returns None. Otherwise it runs the
+    inverted index: each doc's kept grams with their count ``n``, the
+    gram self-join on ``a.doc_id < b.doc_id`` and ``pair_cond``
+    (written over the join aliases ``a``/``b``), and the aggregate
+    ``(doc_a, doc_b, n_common, na, nb)``, which ``finish`` turns into
+    the query's output.
     """
     docs = _docs(spark, sf_dir)
     tok = TX.tokens("text")
@@ -879,29 +860,20 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.size("t") >= 2)
         .select("doc_id", F.array_distinct(TX.word_shingles(F.col("t"), 2)).alias("s"))
     )
-    # Strategy stats from parquet footers — metadata only, NO Spark
-    # job (the embedding-gate pricing): exact rowcount, plus the text
-    # column's uncompressed byte size, which upper-bounds total chars
-    # (BYTE_ARRAY adds a 4-byte length prefix per value), so the byte
-    # gate is strictly more conservative than the char scan it
-    # replaced. A 100 TB corpus blows the gate from metadata without
-    # scanning a byte of text.
     n_docs = table_rowcount(sf_dir, "documents")
     text_bytes = table_column_bytes(sf_dir, "documents", "text")
     df_cap = _jaccard_df_cap(n_docs)
     if n_docs <= JACCARD_LOCAL_MAX_DOCS and text_bytes <= JACCARD_LOCAL_MAX_TEXT_BYTES:
-        local = _jaccard_local(spark, sh, df_cap)
-        if local is not None:
-            return local
-    # explode_nonempty (s is computed + non-empty by the size filter):
-    # plain explode triggers InferFiltersFromGenerate, which inlines
-    # the whole tokenize→shingle pipeline into an inferred filter and
-    # re-evaluates it per row — a measured 26× on this stage. Part of
-    # the "8-24 s" this docstring's local-path gate was built against
-    # was exactly that recompute, not join skew alone.
+        res = local(spark, sh, df_cap)
+        if res is not None:
+            return res
+    # explode_nonempty (s is non-empty by the size filter): plain
+    # explode lets InferFiltersFromGenerate inline the whole
+    # tokenize→shingle pipeline into an inferred filter, re-evaluated
+    # per row (measured 26× on this stage).
     ex0 = sh.select("doc_id", explode_nonempty("s").alias("g"))
-    # df-cap via one window over the gram key (same shuffle the pair
-    # join needs anyway), then re-size each doc over KEPT grams only.
+    # df-cap via one window over the gram key (the shuffle the pair
+    # join needs anyway), then re-size each doc over kept grams only.
     ex = (
         ex0.withColumn("df", F.count("*").over(W.partitionBy("g")))
         .filter(F.col("df") <= df_cap)
@@ -909,47 +881,16 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withColumn("n", F.count("*").over(W.partitionBy("doc_id")))
     )
     a, b = ex.alias("a"), ex.alias("b")
-    # Size-ratio prune inside the join condition: J(A,B) ≤ min/max of
-    # the set sizes, so J ≥ t ⇒ |A| and |B| within a 1/t factor —
-    # exact, and it drops mismatched-size pairs before the pair
-    # aggregation (measured ~2.5× on the dense test corpus). Carrying
-    # n through the join also removes the two post-join size lookups.
-    # Integer form p·n ≤ q·m (review r8): the float form n·t ≤ m is
-    # identical at the dyadic default t = 1/2, but a non-dyadic
-    # threshold whose double rounds UP would drop boundary pairs the
-    # exact local tile test keeps — the cross-regime desync the
-    # derived-constants refactor exists to prevent.
-    p, q = JACCARD_THRESHOLD_NUM, JACCARD_THRESHOLD_DEN
-    ratio_ok = (F.col("a.n") * p <= F.col("b.n") * q) & (
-        F.col("b.n") * p <= F.col("a.n") * q
-    )
-    common = (
-        a.join(
-            b,
-            (F.col("a.g") == F.col("b.g"))
-            & (F.col("a.doc_id") < F.col("b.doc_id"))
-            & ratio_ok,
-        )
+    cond = (F.col("a.g") == F.col("b.g")) & (F.col("a.doc_id") < F.col("b.doc_id"))
+    if pair_cond is not None:
+        cond = cond & pair_cond
+    return finish(
+        a.join(b, cond)
         .groupBy(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
         .agg(
             F.count("*").alias("n_common"),
             F.first("a.n").alias("na"),
             F.first("b.n").alias("nb"),
-        )
-    )
-    uni = F.col("na") + F.col("nb") - F.col("n_common")
-    # Integer threshold q·common ≥ p·union — exact for ANY rational
-    # threshold, in lockstep with the local tile test and the oracle
-    # (review r8; the float compare was identical only at dyadic t).
-    # The EMITTED value goes through the exact ratio identity — raw
-    # round() of an int/int quotient flips at 5th-decimal ties when
-    # the union size has factor-5 denominators (r6 policy).
-    return (
-        common.filter(F.col("n_common") * q >= uni * p)
-        .select(
-            "doc_a",
-            "doc_b",
-            EX.ratio_round4(F.col("n_common"), uni, 0).alias("jaccard"),
         )
     )
 
@@ -969,22 +910,15 @@ SIMHASH_HEX = SIMHASH_BITS // 4  # md5 prefix length, 4 bits per hex char
 SIMHASH_HAMMING_MAX = 3  # ≤3 differing bits ⇒ ≥1 of 4 segments exact
 SIMHASH_SEGMENTS = tuple((15 * i, 0x7FFF) for i in range(4))  # 4 × 15-bit
 
-#: Below this doc count, dedup_simhash's exact pair scan runs locally
-#: on collected signatures (8 bytes/doc). The scan is tiled
-#: (_simhash_pairs_local): per byte-lane uint8 blocks of
-#: SIMHASH_TILE_ROWS × n, never an n×n int64 matrix — at the cap the
-#: peak block is 4096 × 10k × 2 ≈ 80 MB and the popcount work is
-#: 8·n² ≈ 8×10⁸ uint8 table lookups (~1 s of numpy), both honest
-#: driver budgets. Above it the banded segment join runs: with 60-bit
-#: signatures a 15-bit segment has 32768 buckets, so the candidate
-#: set tracks true duplicates, not n².
+#: Below this doc count dedup_simhash collects the signatures (8
+#: bytes/doc) and scans them locally (_simhash_pairs_local). Measured
+#: on local[4]: sf0.1 0.95 s local vs 1.44 s distributed, sf0.01 0.52 s
+#: vs 1.09 s.
 SIMHASH_LOCAL_MAX_DOCS = 10_000
-SIMHASH_TILE_ROWS = 4_096
-#: Candidate budget for the segment-run local scan, as a multiple of
-#: n_docs (matches the tiled fallback's block size, so switching to
-#: the fallback never raises peak memory). Patchable in tests to
-#: force the fallback path.
-SIMHASH_LOCAL_CAND_ROWS = SIMHASH_TILE_ROWS
+#: Candidate budget of the local segment-run scan, as a multiple of
+#: n_docs; past it the scan hands back to the distributed segment
+#: join.
+SIMHASH_LOCAL_CAND_ROWS = 4_096
 
 
 #: SWAR vote packing for _simhash_frame: each 64-bit accumulator sums
@@ -1139,43 +1073,42 @@ def simhash_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SimHash near-dup pairs: Hamming ≤ 3 on 60-bit signatures.
+    """SimHash near-dup pairs: Hamming ≤ SIMHASH_HAMMING_MAX on 60-bit
+    signatures, each pair once with doc_a < doc_b.
 
-    Multi-index (pigeonhole) banding, not a quadratic scan: split the
-    bits into 4 segments of 15. Any pair within Hamming ≤ 3 has at
-    most 3 differing segments, so it matches EXACTLY on ≥1 segment.
-    Each signature explodes into 4 (segment_idx, segment_val) keys and
-    ONE self-equi-join on that key generates the complete candidate
-    set; the exact Hamming filter prunes false candidates, and the
-    FIRST-MATCHING-SEGMENT rule (keep a pair only at the lowest
-    segment index where the two signatures agree — decidable from the
-    two simhashes already on the joined row) emits each pair exactly
-    once WITHOUT a dropDuplicates exchange. One shuffle total, versus
-    the r2 shape's four joins + union + dedup (five exchanges).
-    Output is provably identical to the all-pairs scan (which is what
-    the SQL oracle runs), but the join is hash-based — the 100 TB
-    path. A 15-bit segment has 32768 buckets, so bucket occupancy —
-    and with it candidate volume — tracks true duplicates, not n²
-    (the r1 16-bit signature clustered into 64 buckets/segment and
-    degenerated; width is the lever, see SIMHASH_BITS).
-
-    Below SIMHASH_LOCAL_MAX_DOCS the signatures (8 bytes/doc) are
-    collected and the exact pair scan runs locally, tiled so no n×n
-    matrix ever materializes (peak extra memory ≈ 2 tile rows ×
-    n_docs bytes ≈ tens of MB at the gate) — the same stats-gated
-    escape hatch as JACCARD_LOCAL_*, with a forced-path test pinning
-    the two regimes equal (tests/test_properties.py).
+    Both paths rest on the pigeonhole split into 4 segments of 15
+    bits: a pair within Hamming ≤ 3 differs on at most 3 segments, so
+    it matches exactly on at least one. Candidates come only from
+    equal segments and the exact Hamming filter prunes them, so the
+    output equals the all-pairs scan the oracle runs.
+      * **local** (n_docs ≤ SIMHASH_LOCAL_MAX_DOCS, from footer
+        metadata): the segment-run scan over collected signatures
+        (_simhash_pairs_local). It returns None past its candidate
+        budget and the distributed path runs.
+      * **distributed**: one self-equi-join on (segment, value)
+        (_simhash_pairs_distributed).
     """
     docs = load_table(spark, sf_dir, "documents")  # agg-only: no spread
     sig = _simhash_frame(docs)
-    n_docs = table_rowcount(sf_dir, "documents")  # footer metadata, no job
-    if n_docs <= SIMHASH_LOCAL_MAX_DOCS:
-        return _simhash_pairs_local(spark, sig)
+    if table_rowcount(sf_dir, "documents") <= SIMHASH_LOCAL_MAX_DOCS:
+        local = _simhash_pairs_local(spark, sig)
+        if local is not None:
+            return local
+    return _simhash_pairs_distributed(sig)
+
+
+def _simhash_pairs_distributed(sig: DataFrame) -> DataFrame:
+    """Segment self-join: each signature explodes into its 4
+    (segment_idx, segment_val) keys and one equi-join on that key
+    yields every candidate. The first-matching-segment rule (keep a
+    pair only at the lowest segment where the two signatures agree,
+    decidable from the two simhashes on the joined row) emits each
+    pair once without a dropDuplicates exchange. A 15-bit segment has
+    32768 buckets, so candidate volume tracks true duplicates, not n².
+    """
     sig = sig.cache()
-    # Materialize BEFORE the self-join: both join sides otherwise race
-    # to fill the same cached partitions and serialize on block locks
-    # (same pathology + fix as dedup_minhash_lsh's sig.count(),
-    # measured there at ~4× blocked-vs-CPU time; review finding).
+    # Materialize before the self-join: both join sides otherwise race
+    # to fill the same cached partitions and serialize on block locks.
     sig.count()
     seg_keys = F.array(
         *[
@@ -1229,22 +1162,15 @@ def _popcount64(x):
     return ((v * np.uint64(0x0101010101010101)) >> np.uint64(56)).astype(np.int32)
 
 
-def _simhash_pairs_local(spark: SparkSession, sig: DataFrame) -> DataFrame:
-    """Local exact Hamming pair scan over collected signatures.
+def _simhash_pairs_local(spark: SparkSession, sig: DataFrame) -> DataFrame | None:
+    """Local exact Hamming pair scan over collected signatures, or
+    None when the candidates would exceed SIMHASH_LOCAL_CAND_ROWS × n.
 
-    Same pigeonhole argument as the distributed path, applied in
-    numpy: a pair within Hamming ≤ 3 of a 4×15-bit split agrees on
-    ≥ 1 segment, so candidates come from sorting each segment's
-    values and pairing equal runs — O(n log n) + output, versus the
-    O(n²/tile) byte-table scan this replaces (0.72 s of the query's
-    1.7 s at sf0.1's 5 000 docs; ~10 ms now). Candidates are
-    deduplicated across segments, then the exact SWAR popcount
-    filter runs on just those pairs — output provably identical to
-    the all-pairs scan. A degenerate corpus (one dominant segment
-    value ⇒ run-quadratic candidates) falls back to the bounded
-    tiled scan, so peak memory stays ≈ SIMHASH_TILE_ROWS × n either
-    way, never an n×n matrix (ADVICE r2 on optimistic collect
-    sizing).
+    The pigeonhole argument in numpy: candidates come from sorting
+    each segment's values and pairing equal runs, O(n log n) plus
+    output. Candidates are deduplicated across segments, then the
+    exact SWAR popcount filter keeps those within Hamming ≤ 3, so the
+    output equals the all-pairs scan and no n×n matrix is built.
     """
     import numpy as np
     import pandas as pd
@@ -1259,7 +1185,7 @@ def _simhash_pairs_local(spark: SparkSession, sig: DataFrame) -> DataFrame:
 
     cand_a: list = []
     cand_b: list = []
-    cand_budget = SIMHASH_LOCAL_CAND_ROWS * max(n, 1)  # ≈ the tiled scan's block size
+    cand_budget = SIMHASH_LOCAL_CAND_ROWS * max(n, 1)
     n_cands = 0
     for shift, mask in SIMHASH_SEGMENTS:
         seg = (h >> shift) & mask
@@ -1274,7 +1200,7 @@ def _simhash_pairs_local(spark: SparkSession, sig: DataFrame) -> DataFrame:
                 continue
             n_cands += run * (run - 1) // 2
             if n_cands > cand_budget:
-                return _simhash_pairs_local_tiled(spark, ids, h)
+                return None
             members = order[s:e]
             ii, jj = np.triu_indices(run, k=1)
             cand_a.append(members[ii])
@@ -1294,40 +1220,6 @@ def _simhash_pairs_local(spark: SparkSession, sig: DataFrame) -> DataFrame:
     ida2 = np.where(swap, idb, ida)
     idb2 = np.where(swap, ida, idb)
     res = pd.DataFrame({"doc_a": ida2, "doc_b": idb2, "hamming": pc})
-    if res.empty:
-        return spark.createDataFrame([], out_schema)
-    return spark.createDataFrame(res, out_schema)
-
-
-def _simhash_pairs_local_tiled(spark: SparkSession, ids, h) -> DataFrame:
-    """Bounded-memory all-pairs fallback: byte-table popcount over
-    (SIMHASH_TILE_ROWS × n) uint8 blocks. Only reached when segment
-    runs degenerate (candidate count would exceed the tiled scan's
-    own block budget)."""
-    import numpy as np
-    import pandas as pd
-
-    out_schema = "doc_a long, doc_b long, hamming int"
-    n = len(h)
-    pop8 = np.array([bin(i).count("1") for i in range(256)], dtype=np.uint8)
-    hb = [((h >> (8 * k)) & 0xFF).astype(np.uint8) for k in range(8)]
-    out_a, out_b, out_h = [], [], []
-    for s in range(0, n, SIMHASH_TILE_ROWS):
-        e = min(s + SIMHASH_TILE_ROWS, n)
-        pc = np.zeros((e - s, n), dtype=np.uint8)
-        for k in range(8):  # byte-table popcount, one uint8 block at a time
-            pc += pop8[hb[k][s:e, None] ^ hb[k][None, :]]
-        ai, bj = np.nonzero((pc <= SIMHASH_HAMMING_MAX) & (ids[s:e, None] < ids[None, :]))
-        out_a.append(ids[s:e][ai])
-        out_b.append(ids[bj])
-        out_h.append(pc[ai, bj].astype(np.int32))
-    res = pd.DataFrame(
-        {
-            "doc_a": np.concatenate(out_a),
-            "doc_b": np.concatenate(out_b),
-            "hamming": np.concatenate(out_h),
-        }
-    )
     if res.empty:
         return spark.createDataFrame([], out_schema)
     return spark.createDataFrame(res, out_schema)
@@ -1813,19 +1705,9 @@ def embedding_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
 # exercising non-empty output.
 EMBED_DUP_COSINE = 0.4
 
-#: Regime gate for dedup_embedding_cosine: below this estimated
-#: DENSE-MATRIX BYTE size (n_vecs × dim × 8 B float64, estimated as
-#: 2× the embedding column's uncompressed float32 footer bytes) the
-#: corpus is collected once and broadcast as a dense block — bounded
-#: and explicit, like JACCARD_LOCAL_*. Priced in bytes, not rows: a
-#: row-count gate silently scales with embedding width (2 M × dim-768
-#: × 8 B would be 12 GiB on the driver; ADVICE/VERDICT r4). Above it
-#: NOTHING is collected: the block-grid path replicates each vector
-#: to its B block-pairs and computes each (block_i × block_j) tile as
-#: one Arrow-batched matmul.
-EMBED_LOCAL_MAX_BYTES = 1 << 30  # 1 GiB broadcast block
-#: Target rows per block in the block-grid path (a tile is two blocks
-#: in one task's memory: 2 × 500k × 64 × 8 B ≈ 0.5 GB).
+#: Target rows per block of dedup_embedding_cosine's grid. A tile
+#: task holds its two blocks (2 × 500k × 64 × 8 B ≈ 0.5 GB) plus one
+#: _SWEEP_CELLS similarity chunk (64M float64 ≈ 0.5 GB).
 EMBED_BLOCK_ROWS = 500_000
 
 
@@ -1839,84 +1721,36 @@ EMBED_BLOCK_ROWS = 500_000
     """,
 )
 def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Embedding-space near-duplicate pairs: cosine ≥ threshold over
-    all vector pairs — the semantic-dedup primitive for training-data
-    curation. Exact (recall=1.0).
+    """Embedding-space near-duplicate pairs: cosine ≥ EMBED_DUP_COSINE
+    over all vector pairs, exact (recall 1.0), each pair once with
+    vec_a < vec_b.
 
-    Two regimes, gated on the corpus's estimated dense float64 byte
-    size from footer metadata — no count() job, and priced in BYTES
-    so embedding width is part of the cost (EMBED_LOCAL_MAX_BYTES) —
-    both yielding identical pairs:
+    One plan, the block grid: each vector gets block vec_id mod B
+    (B from the footer rowcount, no Spark job), every row is
+    replicated to the B block-pairs it belongs to, and each
+    (block_i, block_j) tile is one applyInPandas group. Nothing is
+    collected to the driver. A tile sweeps its A block in row chunks
+    of _SWEEP_CELLS // |B| rows, so its similarity matrix never
+    exceeds that many cells. Measured at sf0.1 on local[4]: 0.53 s,
+    against 0.67 s for a collect-and-broadcast plan.
 
-    * **broadcast** (corpus ≤ gate): collect once, broadcast the
-      normalized dense block, scan the corpus with mapInPandas and
-      compute each Arrow batch's similarities in a single matmul — a
-      self-join that materializes 2 M array pairs (measured 20-75 s at
-      sf0.1) becomes one distributed pass (~1 s).
-    * **block-grid** (above the gate — NO driver collect anywhere):
-      assign each vector a block (vec_id mod B), replicate each row to
-      every block-pair it participates in, and compute each
-      (block_i × block_j) tile as one matmul inside applyInPandas.
-      Exact, bounded task memory (two blocks), shuffle volume
-      n_vecs × B rows — the practical prescreen at extreme scale is
-      ann_lsh_bucketed candidates + exact rescore, which trades only
-      cross-bucket borderline pairs.
-
-    Numeric honesty: accumulation is float64 BLAS (normalize-then-
-    matmul), a DIFFERENT op tree from the oracle's sequential
-    dot/(‖a‖·‖b‖) fold — the two agree only to last-ulp level, not
-    bit-for-bit, so (a) rounding is half-AWAY at 6 decimals to match
-    the engines' convention, absorbing the ulp gap, and (b) a pair
-    whose true cosine sits within ~1e-15 of the threshold could in
-    principle land on different sides (measure-zero for real
-    embedding data; the Spark-side VX.cosine queries replicate the
-    fold exactly and carry no such gap).
+    Accumulation is float64 BLAS (normalize, then matmul), a different
+    op tree from the oracle's sequential dot/(‖a‖·‖b‖) fold: the two
+    can differ in the last ulp, which half-away rounding at 6 decimals
+    absorbs. A pair whose cosine sits within ~1e-15 of the threshold
+    could land on different sides.
     """
     import numpy as np
     import pandas as pd
 
     emb = _embs(spark, sf_dir)
     threshold = EMBED_DUP_COSINE
+    sweep_cells = _SWEEP_CELLS  # read here so a patched budget reaches the workers
     n_vecs = table_rowcount(sf_dir, "embeddings")  # footer metadata, no job
-    # float32 column bytes → float64 dense matrix ≈ 2×. Offsets/defs
-    # in the leaf chunks only pad the estimate (conservative).
-    dense_bytes = 2 * table_column_bytes(sf_dir, "embeddings", "embedding")
-
-    if dense_bytes <= EMBED_LOCAL_MAX_BYTES:
-        rows = emb.select("vec_id", "embedding").collect()
-        ids = np.array([r.vec_id for r in rows], dtype=np.int64)
-        M = np.array([r.embedding for r in rows], dtype=np.float64)
-        M /= np.linalg.norm(M, axis=1, keepdims=True)
-        bc = spark.sparkContext.broadcast((ids, M))
-
-        def block_pairs(batches):
-            b_ids, b_m = bc.value
-            for pdf in batches:
-                a_ids = pdf["vec_id"].to_numpy(dtype=np.int64)
-                A = np.array(list(pdf["embedding"]), dtype=np.float64)
-                A /= np.linalg.norm(A, axis=1, keepdims=True)
-                S = A @ b_m.T
-                # upper triangle only (vec_a < vec_b) + threshold
-                mask = (S >= threshold) & (a_ids[:, None] < b_ids[None, :])
-                ai, bj = np.nonzero(mask)
-                yield pd.DataFrame(
-                    {
-                        "vec_a": a_ids[ai],
-                        "vec_b": b_ids[bj],
-                        # Half-AWAY (floor(x·10⁶+0.5); cosine ≥ threshold > 0) to
-                        # match DuckDB round / Spark HALF_UP, not np half-even.
-                        "cosine": np.floor(S[ai, bj] * 1e6 + 0.5) / 1e6,
-                    }
-                )
-
-        return emb.select("vec_id", "embedding").mapInPandas(
-            block_pairs, "vec_a long, vec_b long, cosine double"
-        )
-
     n_blocks = max(2, -(-n_vecs // EMBED_BLOCK_ROWS))  # ceil div
     # pmod, not %: Spark's % keeps the dividend's sign, so a negative
     # vec_id would land in a negative block whose (bi,bj) keys match
-    # no partner tile — its pairs would silently vanish (ADVICE r2).
+    # no partner tile and its pairs would vanish.
     blocked = emb.select(
         "vec_id", "embedding", F.pmod(F.col("vec_id"), F.lit(n_blocks)).cast("int").alias("blk")
     )
@@ -1942,40 +1776,33 @@ def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
         b = pdf[pdf["blk"] == bj]
         a_ids = a["vec_id"].to_numpy(dtype=np.int64)
         b_ids = b["vec_id"].to_numpy(dtype=np.int64)
-        A = np.array(list(a["embedding"]), dtype=np.float64)
-        Bm = np.array(list(b["embedding"]), dtype=np.float64)
-        if len(a_ids) == 0 or len(b_ids) == 0:
-            return pd.DataFrame(
-                {
-                    "vec_a": np.array([], dtype=np.int64),
-                    "vec_b": np.array([], dtype=np.int64),
-                    "cosine": np.array([], dtype=np.float64),
-                }
-            )
-        A /= np.linalg.norm(A, axis=1, keepdims=True)
-        Bm /= np.linalg.norm(Bm, axis=1, keepdims=True)
-        S = A @ Bm.T
-        if bi == bj:
-            # same block on both sides: S holds each unordered pair
-            # twice — keep the upper triangle.
-            mask = (S >= threshold) & (a_ids[:, None] < b_ids[None, :])
-            ai, bj_ = np.nonzero(mask)
-            va, vb = a_ids[ai], b_ids[bj_]
-        else:
-            # disjoint blocks: each unordered cross pair appears once,
-            # but ids interleave across blocks — canonicalize to
-            # (min, max), don't filter on side order.
-            ai, bj_ = np.nonzero(S >= threshold)
-            va = np.minimum(a_ids[ai], b_ids[bj_])
-            vb = np.maximum(a_ids[ai], b_ids[bj_])
-        return pd.DataFrame(
-            {
-                "vec_a": va,
-                "vec_b": vb,
-                # Half-AWAY rounding — see block_pairs note.
-                "cosine": np.floor(S[ai, bj_] * 1e6 + 0.5) / 1e6,
-            }
-        )
+        out = [(np.array([], dtype=np.int64),) * 2 + (np.array([], dtype=np.float64),)]
+        if len(a_ids) and len(b_ids):
+            A = np.array(list(a["embedding"]), dtype=np.float64)
+            Bm = np.array(list(b["embedding"]), dtype=np.float64)
+            A /= np.linalg.norm(A, axis=1, keepdims=True)
+            Bm /= np.linalg.norm(Bm, axis=1, keepdims=True)
+            rows = max(1, sweep_cells // len(b_ids))
+            for s in range(0, len(a_ids), rows):
+                ids = a_ids[s : s + rows]
+                S = A[s : s + rows] @ Bm.T
+                if bi == bj:
+                    # same block on both sides: S holds each unordered
+                    # pair twice — keep the upper triangle.
+                    ai, bj_ = np.nonzero((S >= threshold) & (ids[:, None] < b_ids[None, :]))
+                    va, vb = ids[ai], b_ids[bj_]
+                else:
+                    # disjoint blocks: each unordered cross pair appears
+                    # once, but ids interleave across blocks —
+                    # canonicalize to (min, max).
+                    ai, bj_ = np.nonzero(S >= threshold)
+                    va = np.minimum(ids[ai], b_ids[bj_])
+                    vb = np.maximum(ids[ai], b_ids[bj_])
+                # Half-AWAY (floor(x·10⁶+0.5); cosine ≥ threshold > 0) to
+                # match DuckDB round / Spark HALF_UP, not np half-even.
+                out.append((va, vb, np.floor(S[ai, bj_] * 1e6 + 0.5) / 1e6))
+        va, vb, cos = (np.concatenate(c) for c in zip(*out))
+        return pd.DataFrame({"vec_a": va, "vec_b": vb, "cosine": cos})
 
     return replicated.groupBy("bi", "bj").applyInPandas(
         tile, "vec_a long, vec_b long, cosine double"
@@ -3275,14 +3102,10 @@ _CONTAINMENT_VOCAB_CAP = (1 << 24) // _CONT_Q
 
 
 def _containment_local(spark: SparkSession, sh: DataFrame, df_cap: int) -> DataFrame | None:
-    """Exact all-pairs containment in the small-corpus regime — the
-    sibling of _jaccard_local: same shared dense setup
-    (_dense_shingle_matrix), same preallocated-tile in-place sweep
-    (the r8 Jaccard fix — per-tile temporaries, not the GEMM, were
-    the measured 0.6→3.0 s variance source, and the first containment
-    cut reintroduced them at ~5× the bytes; review finding r8). The
-    fused threshold differs: containment tests against min(|A|,|B|),
-    and min distributes over the comparison —
+    """Exact all-pairs containment, local path of _shingle_pair_query:
+    the same dense setup and preallocated in-place chunk sweep as
+    _jaccard_local. The fused threshold differs: containment tests
+    against min(|A|,|B|), and min distributes over the comparison —
 
         q·c ≥ p·min(|A|,|B|)  ⟺  q·c ≥ p·|A|  OR  q·c ≥ p·|B|
 
@@ -3304,7 +3127,7 @@ def _containment_local(spark: SparkSession, sh: DataFrame, df_cap: int) -> DataF
         return spark.createDataFrame([], out_schema)
     out_a, out_b, out_c, out_r = [], [], [], []
     psizes32 = sizes.astype(np.float32) * np.float32(_CONT_P)
-    block = max(1, _JACCARD_SWEEP_CELLS // max(n, 1))
+    block = max(1, _SWEEP_CELLS // max(n, 1))
     nb = min(block, n)
     common = np.empty((nb, n), dtype=np.float32)
     cand = np.empty((nb, n), dtype=bool)
@@ -3328,11 +3151,9 @@ def _containment_local(spark: SparkSession, sh: DataFrame, df_cap: int) -> DataF
         mn = np.minimum(sa, sb)
         good = mn > 0
         ai, bj, mn = ai[good], bj[good], mn[good]
-        # Exact survivor counts recovered FROM the tile buffer (the
-        # jaccard twin's move — no einsum recompute): cb holds q·c,
-        # an exact f32 integer ≤ q·nv < 2^24, and dividing by the
-        # integer q is exact (the true quotient is a representable
-        # integer, so correctly-rounded division returns it).
+        # Exact survivor counts recovered from the chunk buffer: cb
+        # holds q·c, an exact f32 integer < 2^24, so dividing by the
+        # integer q is exact.
         com = (cb[ai, bj] / np.float32(_CONT_Q)).astype(np.int64)
         out_a.append(ids[start + ai])
         out_b.append(ids[bj])
@@ -3384,70 +3205,30 @@ def _containment_local(spark: SparkSession, sh: DataFrame, df_cap: int) -> DataF
     """,
 )
 def dedup_containment_ngram(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Asymmetric near-dup detection: word-bigram CONTAINMENT
-    C = |A∩B| / min(|A|,|B|) ≥ 0.8 — the Broder containment measure
-    that catches what Jaccard structurally misses: a short document
-    quoted or embedded inside a much longer one (J = |A∩B|/|A∪B| is
-    crushed by the big set's size; C is not). The standard second
-    pass of an LLM-corpus dedup stack (quote/subset leakage).
+    """Asymmetric near-dup pairs: word-bigram containment
+    C = |A∩B| / min(|A|,|B|) ≥ CONTAINMENT_THRESHOLD_PCT, which finds
+    a short document quoted inside a much longer one (Jaccard is
+    crushed by the larger set's size; C is not).
 
-    The same stats-driven regime split as dedup_ngram_jaccard (gates
-    priced from parquet footers, no job): local dense matmul below,
-    inverted index above. One real difference, documented loudly: the
-    Jaccard size-ratio prune is UNSOUND here — a 10-gram doc can be
-    80 %-contained in a 10 000-gram doc, which is exactly the pair
-    containment exists to find — so the distributed join has no size
-    predicate and the df-cap (boilerplate grams dropped before
-    sizing) is the sole hot-key defense. At 100 TB the shuffle key
-    is still the shingle and pair aggregation only sees co-gram
-    candidates; the threshold filter is the exact integer comparison
-    q·common ≥ p·min (5·common ≥ 4·min at 80 %), with p/q derived
-    from CONTAINMENT_THRESHOLD_PCT in both regimes and the oracle.
+    Same kernel and paths as dedup_ngram_jaccard (_shingle_pair_query:
+    _containment_local below the gates, the inverted index above),
+    with one difference: the gram self-join has no size predicate,
+    because a 10-gram doc can be 80 % contained in a 10 000-gram doc.
+    The df cap is its only hot-key defense. The threshold is the
+    integer test q·common ≥ p·min, p/q derived from
+    CONTAINMENT_THRESHOLD_PCT in both paths and the oracle.
     """
-    docs = _docs(spark, sf_dir)
-    tok = TX.tokens("text")
-    sh = (
-        docs.select("doc_id", tok.alias("t"))
-        .filter(F.size("t") >= 2)
-        .select("doc_id", F.array_distinct(TX.word_shingles(F.col("t"), 2)).alias("s"))
-    )
-    n_docs = table_rowcount(sf_dir, "documents")
-    text_bytes = table_column_bytes(sf_dir, "documents", "text")
-    df_cap = _jaccard_df_cap(n_docs)
-    if n_docs <= JACCARD_LOCAL_MAX_DOCS and text_bytes <= JACCARD_LOCAL_MAX_TEXT_BYTES:
-        local = _containment_local(spark, sh, df_cap)
-        if local is not None:
-            return local
-    ex0 = sh.select("doc_id", explode_nonempty("s").alias("g"))
-    ex = (
-        ex0.withColumn("df", F.count("*").over(W.partitionBy("g")))
-        .filter(F.col("df") <= df_cap)
-        .drop("df")
-        .withColumn("n", F.count("*").over(W.partitionBy("doc_id")))
-    )
-    a, b = ex.alias("a"), ex.alias("b")
-    common = (
-        a.join(
-            b,
-            (F.col("a.g") == F.col("b.g")) & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .groupBy(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
-        .agg(
-            F.count("*").alias("n_common"),
-            F.first("a.n").alias("na"),
-            F.first("b.n").alias("nb"),
-        )
-    )
-    mn = F.least(F.col("na"), F.col("nb"))
-    return (
-        common.filter(F.lit(_CONT_Q) * F.col("n_common") >= F.lit(_CONT_P) * mn)
-        .select(
+
+    def finish(common: DataFrame) -> DataFrame:
+        mn = F.least(F.col("na"), F.col("nb"))
+        return common.filter(F.lit(_CONT_Q) * F.col("n_common") >= F.lit(_CONT_P) * mn).select(
             "doc_a",
             "doc_b",
             "n_common",
             EX.ratio_round4(F.col("n_common"), mn, 0).alias("containment"),
         )
-    )
+
+    return _shingle_pair_query(spark, sf_dir, _containment_local, finish)
 
 
 # ---------------------------------------------------------------------------

@@ -96,6 +96,10 @@ def get_spark(app_name: str = "bigdata_riveranalysis_spark", *, shuffle_partitio
         # executor-memory-safe at any SF.
         .config("spark.sql.files.maxPartitionBytes", str(128 * 1024 * 1024))
         .config("spark.ui.enabled", "false")
+        # The console progress bar writes carriage-return lines into
+        # stderr mid-output, splitting the line-oriented reports of the
+        # tools that share the terminal.
+        .config("spark.ui.showConsoleProgress", "false")
     )
     if not os.environ.get("SPARK_GRAFT_ON_CLUSTER"):
         builder = builder.master(f"local[{_CPUS}]").config("spark.driver.memory", "90g")

@@ -165,24 +165,28 @@ def test_simhash_local_and_distributed_plans_agree(spark):
     assert local, "sf0.001 corpus should contain at least one simhash near-dup pair"
 
 
-def test_simhash_local_segment_scan_and_tiled_fallback_agree(spark):
-    """_simhash_pairs_local's candidate-budget switch is physical
-    only: forcing the bounded tiled all-pairs fallback (budget = 0)
-    must give the exact same pairs as the segment-run candidate
-    scan."""
+def test_simhash_candidate_budget_falls_through_to_segment_join(spark):
+    """Past its candidate budget the local segment-run scan hands back
+    to the distributed segment join (budget = 0, spied so the test
+    cannot pass off the local path), with the same pairs."""
     from bigdata_riveranalysis_spark.plans import llmdata as L
 
     fn = L.dedup_simhash
     sf = "/root/testdata/sf0.001"
-    fast = sorted(map(tuple, fn(spark, sf).collect()))
+    local = sorted(map(tuple, fn(spark, sf).collect()))
     saved = L.SIMHASH_LOCAL_CAND_ROWS
+    orig_dist = L._simhash_pairs_distributed
+    ran_dist = []
     try:
-        L.SIMHASH_LOCAL_CAND_ROWS = 0  # any candidate run → tiled fallback
-        tiled = sorted(map(tuple, fn(spark, sf).collect()))
+        L.SIMHASH_LOCAL_CAND_ROWS = 0
+        L._simhash_pairs_distributed = lambda sig: (ran_dist.append(True), orig_dist(sig))[1]
+        dist = sorted(map(tuple, fn(spark, sf).collect()))
     finally:
         L.SIMHASH_LOCAL_CAND_ROWS = saved
-    assert fast == tiled
-    assert fast, "sf0.001 corpus should contain at least one simhash near-dup pair"
+        L._simhash_pairs_distributed = orig_dist
+    assert ran_dist, "the distributed segment join must actually run"
+    assert local == dist
+    assert local, "sf0.001 corpus should contain at least one simhash near-dup pair"
 
 
 def test_components_local_and_distributed_plans_agree(spark):
@@ -219,68 +223,43 @@ def test_components_local_and_distributed_plans_agree(spark):
     assert local, "sf0.001 corpus should contain at least one near-dup cluster"
 
 
-def test_embedding_cosine_broadcast_and_blockgrid_agree(spark):
-    """dedup_embedding_cosine's gate is physical only: forcing the
-    block-grid (no-collect) path with tiny blocks must give the exact
-    same pairs as the broadcast path (sf0.001 corpus)."""
+def test_embedding_cosine_block_grid_shapes_agree(spark):
+    """dedup_embedding_cosine gives the same pairs at any grid shape:
+    the default two-block grid, a multi-block grid with off-diagonal
+    tiles (EMBED_BLOCK_ROWS = 7), and one-row sweep chunks inside each
+    tile (_SWEEP_CELLS = 3). Building the frame starts no job beyond
+    the parquet scan's own schema inference (no driver collect), and
+    the plan is the grouped tile map only (no mapInPandas)."""
     from bigdata_riveranalysis_spark.plans import llmdata as L
+    from bigdata_riveranalysis_spark.sources.tables import load_table
 
     fn = L.dedup_embedding_cosine
     sf = "/root/testdata/sf0.001"
-    bcast = sorted(map(tuple, fn(spark, sf).collect()))
-    saved = (L.EMBED_LOCAL_MAX_BYTES, L.EMBED_BLOCK_ROWS)
-    try:
-        L.EMBED_LOCAL_MAX_BYTES = 0
-        L.EMBED_BLOCK_ROWS = 7  # force a multi-block grid w/ off-diagonal tiles
-        grid = sorted(map(tuple, fn(spark, sf).collect()))
-    finally:
-        L.EMBED_LOCAL_MAX_BYTES, L.EMBED_BLOCK_ROWS = saved
-    assert bcast == grid
-    assert bcast, "sf0.001 embeddings should contain at least one near-dup pair"
+    sc = spark.sparkContext
 
+    def build_jobs(group, build):
+        sc.setJobGroup(group, group)
+        try:
+            return build(), len(sc.statusTracker().getJobIdsForGroup(group))
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
 
-def test_embedding_gate_prices_bytes_not_rows(spark, tmp_path):
-    """The collect-gate is byte-denominated: a HIGH-DIM corpus with a
-    tiny ROW count must still route to the distributed block-grid once
-    its dense bytes exceed the budget (a row-count gate would collect
-    it). 8 rows × dim 4096 float32 ≈ 131 KB column bytes → ~262 KB
-    dense float64 estimate."""
-    import numpy as np
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    from bigdata_riveranalysis_spark.plans import llmdata as L
-    from bigdata_riveranalysis_spark.sources.tables import table_column_bytes
-
-    rng = np.random.default_rng(7)
-    n, dim = 8, 4096
-    tbl = pa.table(
-        {
-            "vec_id": pa.array(np.arange(n), type=pa.int64()),
-            "embedding": pa.array(
-                [rng.normal(size=dim).astype(np.float32) for _ in range(n)],
-                type=pa.list_(pa.float32()),
-            ),
-            "label": pa.array(np.zeros(n, dtype=np.int32), type=pa.int32()),
-        }
-    )
-    pq.write_table(tbl, str(tmp_path / "embeddings.parquet"))
-    sf_dir = str(tmp_path)
-
-    col_bytes = table_column_bytes(sf_dir, "embeddings", "embedding")
-    assert col_bytes >= n * dim * 4  # uncompressed data + level overhead
-
-    saved = L.EMBED_LOCAL_MAX_BYTES
-    try:
-        L.EMBED_LOCAL_MAX_BYTES = 200_000  # < 2×col_bytes, yet ≫ 8 "rows"
-        plan = L.dedup_embedding_cosine(spark, sf_dir)._jdf.queryExecution().toString()
-        assert "FlatMapGroupsInPandas" in plan  # block-grid tile path
-        assert "MapInPandas" not in plan.replace("FlatMapGroupsInPandas", "")
-        L.EMBED_LOCAL_MAX_BYTES = 10 * 1024 * 1024  # comfortably above
-        plan = L.dedup_embedding_cosine(spark, sf_dir)._jdf.queryExecution().toString()
-        assert "MapInPandas" in plan  # broadcast path
-    finally:
-        L.EMBED_LOCAL_MAX_BYTES = saved
+    _, scan_jobs = build_jobs("embed-scan", lambda: load_table(spark, sf, "embeddings"))
+    df, n_jobs = build_jobs("embed-build", lambda: fn(spark, sf))
+    assert n_jobs == scan_jobs
+    plan = df._jdf.queryExecution().toString()
+    assert "FlatMapGroupsInPandas" in plan
+    assert "MapInPandas" not in plan.replace("FlatMapGroupsInPandas", "")
+    two_blocks = sorted(map(tuple, df.collect()))
+    assert two_blocks, "sf0.001 embeddings should contain at least one near-dup pair"
+    for name, value in (("EMBED_BLOCK_ROWS", 7), ("_SWEEP_CELLS", 3)):
+        saved = getattr(L, name)
+        try:
+            setattr(L, name, value)
+            assert sorted(map(tuple, fn(spark, sf).collect())) == two_blocks, name
+        finally:
+            setattr(L, name, saved)
 
 
 @SETTINGS

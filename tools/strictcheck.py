@@ -122,6 +122,7 @@ def main() -> int:
             # nanosAsLong) stays at Spark defaults, which is the point.
             .config("spark.driver.memory", "90g")
             .config("spark.ui.enabled", "false")
+            .config("spark.ui.showConsoleProgress", "false")
             .getOrCreate()
         )
         spark.sparkContext.setLogLevel("WARN")
