@@ -23,6 +23,7 @@ import shutil
 
 import pytest
 from pyspark.sql import functions as F  # noqa: F401
+from pyspark.sql import types as T
 
 from bigdata_riveranalysis_spark.plans.registry import REGISTRY, RETIRED
 
@@ -58,6 +59,28 @@ def test_no_oracle_emits_hugeint_or_decimal_columns(duck):
     assert not offenders, (
         f"oracles with HUGEINT/DECIMAL final columns (driver-red class): "
         f"{offenders}"
+    )
+
+
+def test_no_query_emits_decimal_columns(spark):
+    """Spark side of the same rule: no query's FINAL schema may carry
+    DecimalType — ``toPandas()`` renders it as object-dtype
+    ``decimal.Decimal``, which canonicalizes differently from the
+    oracle's int64/float64 under repr-style canons. Batch plans are
+    lazy (schema analysis only); streaming drains DO execute at
+    SF_SMOKE — a few seconds each, the price of covering the tier the
+    r7 red actually lived in (review: the earlier skip left a
+    streaming DECIMAL final invisible to pytest, backstopped only by
+    the manually-run strictcheck)."""
+    offenders = {}
+    for name, q in _ALL_QUERIES.items():
+        schema = q.fn(spark, SF_SMOKE).schema
+        bad = [f.name for f in schema.fields
+               if isinstance(f.dataType, T.DecimalType)]
+        if bad:
+            offenders[name] = bad
+    assert not offenders, (
+        f"queries with DECIMAL final columns (driver-red class): {offenders}"
     )
 
 

@@ -194,6 +194,32 @@ def test_multimodal_oracle_corpus_assumption_holds(spark):
         )
 
 
+def test_no_cartesian_or_row_python_in_any_batch_plan(spark):
+    """Enforced plan gate over the whole registry (PLANS.md as an
+    invariant, not just a report): no batch query may plan a
+    CartesianProduct or a row-at-a-time Python stage
+    (BatchEvalPython). Arrow-batched stages (MapInPandas etc.) are the
+    sanctioned Python path; BroadcastNestedLoopJoin is allowed because
+    the two uses (interval range-join, broadcast query-side kNN) are
+    bounded-by-broadcast designs, while an unbounded cartesian is
+    always a scale defect. Streaming queries are excluded — building
+    them executes the stream job; their plans are asserted in
+    tests/test_streaming.py.
+    """
+    from .conftest import SF_ORACLE
+    from bigdata_riveranalysis_spark.plans import REGISTRY
+
+    offenders = {}
+    for name, q in REGISTRY.items():
+        if name.startswith("stream_"):
+            continue
+        plan = q.fn(spark, SF_ORACLE)._jdf.queryExecution().executedPlan().toString()
+        bad = [m for m in ("CartesianProduct", "BatchEvalPython") if m in plan]
+        if bad:
+            offenders[name] = bad
+    assert not offenders, f"scale-defect operators in plans: {offenders}"
+
+
 def test_events_value_two_decimal_assumption_holds(spark):
     """plans/river.py::_avg4_exact treats readings as exact cents
     (≤2 decimal places). Assert that corpus property at every fixture
@@ -258,55 +284,32 @@ def test_embeddings_corpus_assumption_holds(spark):
         )
 
 
-def test_every_query_output_schema_and_plan_gates(spark):
-    """Registry-wide gates, each query built once:
-
-    * no query (streaming and retired included) may emit a DecimalType
-      column: ``toPandas()`` renders it as object ``decimal.Decimal``,
-      which canonicalizes differently from the oracle's int64/float64;
-    * no registered batch query may emit an array/map/struct/binary
-      column: the driver's pandas canonicalizer cannot hash them;
-    * no registered batch plan may contain a CartesianProduct or a
-      row-at-a-time Python stage (BatchEvalPython). Arrow-batched
-      stages are the sanctioned Python path; BroadcastNestedLoopJoin
-      is allowed for its bounded-by-broadcast uses.
-
-    Registered batch queries are built at SF_ORACLE. Streaming and
-    retired queries are built at SF_SMOKE: building a streaming query
-    executes its drain, and its plans are asserted in
-    tests/test_streaming.py.
-    """
+def test_every_query_output_is_driver_hashable(spark):
+    """Registry-wide gate: no query may emit array/map/struct/binary
+    columns — the external harness's pandas canonicalizer cannot hash
+    them (its sort_values dies with "unhashable type: 'list'"), which
+    was r5's single red row (embedding_quantize_int8's array<long>
+    codes). Streaming queries are excluded (building them executes
+    the stream job; their sinks are checked in test_streaming.py and
+    all project scalars anyway)."""
     from pyspark.sql import types as T
 
-    from bigdata_riveranalysis_spark.plans.registry import REGISTRY, RETIRED
-
     from .conftest import SF_SMOKE
+    from bigdata_riveranalysis_spark.plans import REGISTRY
 
-    unhashable = (T.ArrayType, T.MapType, T.StructType, T.BinaryType)
-    decimal, unhashed, scale_defects = {}, {}, {}
-    for name, q in {**REGISTRY, **RETIRED}.items():
-        batch = name in REGISTRY and not name.startswith("stream_")
-        df = q.fn(spark, SF_ORACLE if batch else SF_SMOKE)
-        fields = df.schema.fields
-        bad = [f.name for f in fields if isinstance(f.dataType, T.DecimalType)]
-        if bad:
-            decimal[name] = bad
-        if not batch:
+    offenders = {}
+    for name, q in REGISTRY.items():
+        if name.startswith("stream_"):
             continue
+        schema = q.fn(spark, SF_SMOKE).schema
         bad = [
             f"{f.name}: {f.dataType.simpleString()}"
-            for f in fields
-            if isinstance(f.dataType, unhashable)
+            for f in schema.fields
+            if isinstance(f.dataType, (T.ArrayType, T.MapType, T.StructType, T.BinaryType))
         ]
         if bad:
-            unhashed[name] = bad
-        plan = df._jdf.queryExecution().executedPlan().toString()
-        bad = [m for m in ("CartesianProduct", "BatchEvalPython") if m in plan]
-        if bad:
-            scale_defects[name] = bad
-    assert not decimal, f"queries with DECIMAL final columns: {decimal}"
-    assert not unhashed, f"driver-unhashable output columns: {unhashed}"
-    assert not scale_defects, f"scale-defect operators in plans: {scale_defects}"
+            offenders[name] = bad
+    assert not offenders, f"driver-unhashable output columns: {offenders}"
 
 
 def test_session_disables_console_progress(spark):
